@@ -21,17 +21,17 @@ import org.apache.spark.sql.functions._
   * oracle-replayable (`q_incr_ann` trains the same frozen model in SQL
   * over the bootstrap subset and assigns the union).
   *
-  * State layout under `root/` (all commits through [[StateManifest]] —
-  * segment list, batch ledger, schema fingerprint in ONE atomic rename):
+  * The index is a [[SegmentedState]] root: this object owns only the
+  * segment naming, the fold and the readers; the live list, the ledgered
+  * append commit, the compaction commit, vacuum and size-triggered
+  * compaction are the shared lifecycle. Names under `root/`:
   *
   *   - `seg-b<id>/cell=N/...` — one cell-partitioned segment per applied
-  *     batch (bootstrap = `seg-b0`). A crashed ingest's orphan directory
-  *     is invisible until its manifest commit lands.
+  *     batch (bootstrap = `seg-b0`).
   *   - `seg-c<id>/` — a compacted segment ([[compact]]): all live rows
-  *     folded back into ONE cell-partitioned layout, CAS-committed (the
-  *     [[IncrementalDedup.compactIndex]] discipline), orphans reclaimed
-  *     by [[vacuum]]. Without it a probed read pays O(#ingests) file
-  *     opens per cell; compacted it returns to O(probed cells).
+  *     folded back into ONE cell-partitioned layout. Without it a probed
+  *     read pays O(#ingests) file opens per cell; compacted it returns to
+  *     O(probed cells).
   *   - `seg-d<id>/` — a tombstone segment ([[delete]]): the deleted ids
   *     plus their delete batch. Searches subtract them with a broadcast
   *     anti-join at the candidate stage; [[compact]] retires them
@@ -44,13 +44,16 @@ import org.apache.spark.sql.functions._
   */
 object AnnIngest {
 
-  private def lastApplied(root: String): Long =
-    StateManifest.current(root).map(_.lastBatch).getOrElse(-1L)
+  private object Kind extends SegmentedState.Kind {
+    def onDisk(root: String): Seq[String] =
+      SegmentedState.children(root).filter(_.startsWith("seg-"))
+    def batchOf(name: String): Option[Long] = segId(name)
+    override def reaped(dir: String): Unit = AnnIndex.invalidate(dir)
+  }
 
   /** Live segment names (manifest order) — data segments (`seg-b`/`seg-c`)
     * AND tombstone segments (`seg-d`, [[delete]]). */
-  def liveSegments(root: String): Seq[String] =
-    StateManifest.current(root).map(_.segments).getOrElse(Nil)
+  def liveSegments(root: String): Seq[String] = SegmentedState.live(Kind, root)
 
   private def isTomb(name: String): Boolean = name.startsWith("seg-d")
 
@@ -63,38 +66,39 @@ object AnnIngest {
     * A replay of an applied `batchId` is a no-op; a crashed batch's
     * replay overwrites its own orphan directory before the commit. */
   def ingest(spark: SparkSession, root: String, delta: DataFrame,
-      cents: Array[Array[Double]], batchId: Long): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    if (batchId <= lastApplied(root)) return
-    val assigned = VectorSearch.ivfAssign(delta, cents)
-    // an EMPTY batch (quiet feed, or a degenerate model that assigns
-    // nothing) advances the ledger without a segment: partitionBy of an
-    // empty frame writes a footerless directory no reader can open
-    if (assigned.isEmpty) {
-      val fpE = StateManifest.schemaFingerprint(delta.schema)
-      StateManifest.commit(root, liveSegments(root), batchId,
-        StateManifest.current(root).map(_.schemaFp).filter(_.nonEmpty).getOrElse(fpE))
-      return
-    }
-    val name = s"seg-b$batchId"
-    // crash-replay overwrites this batch's own orphan directory — drop any
-    // cached metadata/frame for it FIRST so the (session, dir) caches'
-    // immutability invariant holds by construction at every overwrite
-    // site, not by the discipline that uncommitted directories are never
-    // listed (ADVICE r18; mirrors compact's orphan-overwrite invalidate)
-    AnnIndex.invalidate(s"$root/$name")
-    assigned
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$root/$name")
-    val fp = StateManifest.schemaFingerprint(delta.schema)
-    StateManifest.current(root).map(_.schemaFp)
-      .filter(f => f.nonEmpty && f != fp).foreach { f =>
-        throw new IllegalStateException(
-          s"ann ingest schema drift at $root: manifest=$f batch=$fp")
+      cents: Array[Array[Double]], batchId: Long): Unit =
+    appendBatch(root, batchId, StateManifest.schemaFingerprint(delta.schema)) {
+      val assigned = VectorSearch.ivfAssign(delta, cents)
+      // an EMPTY batch (quiet feed, or a degenerate model that assigns
+      // nothing) advances the ledger without a segment: partitionBy of an
+      // empty frame writes a footerless directory no reader can open
+      if (assigned.isEmpty) None
+      else {
+        val name = s"seg-b$batchId"
+        // crash-replay overwrites this batch's own orphan directory — drop
+        // any cached metadata/frame for it FIRST so the (session, dir)
+        // caches' immutability invariant holds at every overwrite site
+        AnnIndex.invalidate(s"$root/$name")
+        assigned
+          .write.mode("overwrite").partitionBy("cell").parquet(s"$root/$name")
+        Some(name)
       }
-    StateManifest.commit(root, liveSegments(root) :+ name, batchId, fp)
+    }
+
+  /** The ledgered append [[ingest]] and [[delete]] share: a replayed
+    * `batchId` is a no-op; otherwise `write` puts the batch's segment on
+    * disk and names it (None: an empty batch, which advances the ledger
+    * without one), and the name is published. */
+  private def appendBatch(root: String, batchId: Long, fp: String)(
+      write: => Option[String]): Unit = SegmentedState.writing(root) {
+    val base = StateManifest.current(root)
+    if (!base.exists(_.lastBatch >= batchId)) {
+      val seg = write
+      SegmentedState.publish(root, base, Some(batchId), fp)(_ ++ seg)
+    }
   }
 
-  /** DELETE vectors from the maintained index (round 19): the missing
+  /** DELETE vectors from the maintained index: the missing
     * half of the production write path — FAISS `remove_ids` / the
     * Milvus/Lucene tombstone-and-merge design, expressed as the same
     * O(Δ) ledgered append as [[ingest]]. The ids land as a tiny
@@ -117,22 +121,20 @@ object AnnIngest {
     * [[graft.streaming.StreamAnnIngest.maintainCrud]] wires exactly
     * that per trigger. */
   def delete(spark: SparkSession, root: String, ids: DataFrame,
-      batchId: Long): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    if (batchId <= lastApplied(root)) return
-    val fp = StateManifest.current(root).map(_.schemaFp).getOrElse("")
-    val tombs = ids.select(col(ids.columns.head).cast("long").as("id"))
-      .distinct().withColumn("del_batch", lit(batchId))
-    if (tombs.isEmpty) {
-      StateManifest.commit(root, liveSegments(root), batchId, fp)
-      return
+      batchId: Long): Unit =
+    // "" keeps the data segments' recorded fingerprint
+    appendBatch(root, batchId, "") {
+      val tombs = ids.select(col(ids.columns.head).cast("long").as("id"))
+        .distinct().withColumn("del_batch", lit(batchId))
+      if (tombs.isEmpty) None
+      else {
+        val name = s"seg-d$batchId"
+        AnnIndex.invalidate(s"$root/$name") // crash-replay overwrite
+        // tombstones are id-sized — one file keeps the broadcast read trivial
+        tombs.coalesce(1).write.mode("overwrite").parquet(s"$root/$name")
+        Some(name)
+      }
     }
-    val name = s"seg-d$batchId"
-    AnnIndex.invalidate(s"$root/$name") // crash-replay overwrite (ADVICE r18)
-    // tombstones are id-sized — one file keeps the broadcast read trivial
-    tombs.coalesce(1).write.mode("overwrite").parquet(s"$root/$name")
-    StateManifest.commit(root, liveSegments(root) :+ name, batchId, fp)
-  }
 
   /** Data segments unioned with each row tagged by its segment's batch id
     * — the tag the ordering-exact tombstone subtraction joins against. */
@@ -164,11 +166,9 @@ object AnnIngest {
     * newer tombstone are dropped from the fold, and the tombstones leave
     * the manifest with the data segments they erased. Otherwise pure
     * layout maintenance (`cell` is a function of the frozen model — no
-    * re-assignment); optimistic CAS aborts (None) if an ingest advanced
-    * the manifest mid-compaction. Old directories stay readable for
-    * earlier frames until [[vacuum]]. Runs under the per-root maintenance
-    * lock so a concurrent [[vacuum]] can never delete the half-written
-    * compacted directory before its CAS commit.
+    * re-assignment), committed by [[SegmentedState.compact]]: None if a
+    * writer committed mid-compaction. Old directories stay readable for
+    * earlier frames until [[vacuum]].
     *
     * Declines (None) when there is nothing to fold — ≤1 data segment and
     * no tombstones — and also when tombstones erase EVERY live row: an
@@ -176,13 +176,11 @@ object AnnIngest {
     * so a fully-tombstoned index keeps its tombstone-live layout until
     * new data lands. */
   def compact(spark: SparkSession, root: String): Option[String] =
-    StateManifest.withMaintenanceLock(root) {
-      val cur = StateManifest.current(root)
-      val live = cur.map(_.segments).getOrElse(Nil)
-      val (tombs, data) = live.partition(isTomb)
+    SegmentedState.compact(root) { cur =>
+      val (tombs, data) = cur.segments.partition(isTomb)
       if (data.isEmpty || (data.size <= 1 && tombs.isEmpty)) None
       else {
-        val name = s"seg-c${cur.get.lastBatch}"
+        val name = s"seg-c${cur.lastBatch}"
         val folded =
           if (tombs.isEmpty) taggedUnion(spark, root, data).drop("_seg")
           else applyTombs(taggedUnion(spark, root, data),
@@ -193,71 +191,29 @@ object AnnIngest {
             .repartition(col("cell"))
             .write.mode("overwrite").partitionBy("cell").parquet(s"$root/$name")
           AnnIndex.invalidate(s"$root/$name") // overwrite may replace an orphan
-          StateManifest.commitIf(root, cur.map(_.version), Seq(name),
-            cur.get.lastBatch, cur.get.schemaFp).map(_ => name)
+          Some(Seq(name) -> name)
         }
       }
-    }.flatten
+    }
 
   /** The numeric id of a segment name (`seg-b<id>` / `seg-c<id>`). */
   private def segId(name: String): Option[Long] =
     name.stripPrefix("seg-").drop(1).toLongOption
 
-  /** Delete segment directories the CURRENT manifest no longer references
-    * (compaction leftovers, aborted CAS, crashed ingests). Run after
-    * frames created before the compact are evaluated.
-    *
-    * Two concurrent-writer guards (ADVICE r17 — the unguarded version
-    * could delete an in-flight writer's directory mid-write): (1) names
-    * whose id exceeds the manifest ledger are an ingest that has written
-    * but not yet committed — skipped, the batch-id guard; (2) the whole
-    * pass holds the per-root maintenance lock shared with [[compact]],
-    * whose in-flight directory carries an id ≤ the ledger and is
-    * protected by mutual exclusion instead. */
-  def vacuum(root: String): Seq[String] =
-    StateManifest.withMaintenanceLock(root) {
-      val m = StateManifest.current(root)
-      val live = m.map(_.segments).getOrElse(Nil).toSet
-      val last = m.map(_.lastBatch).getOrElse(-1L)
-      if (live.isEmpty) Nil
-      else {
-        val gone = Option(new java.io.File(root).list())
-          .getOrElse(Array.empty[String])
-          .filter(n => n.startsWith("seg-") && !live.contains(n) &&
-            segId(n).forall(_ <= last)) // in-flight ingest: not ours to reap
-          .sorted.toIndexedSeq
-        gone.foreach { n =>
-          AnnIndex.invalidate(s"$root/$n")
-          AtomicFiles.rmTree(java.nio.file.Paths.get(root).resolve(n))
-        }
-        gone
-      }
-    }.getOrElse(Nil)
+  /** Delete segment directories the current manifest no longer lists
+    * ([[SegmentedState.vacuum]]); a name whose batch id is above the
+    * ledger is an ingest still in flight and is skipped. Run after frames
+    * created before the compact are evaluated. */
+  def vacuum(root: String): Seq[String] = SegmentedState.vacuum(Kind, root)
 
-  /** Size-triggered maintenance (round 18, VERDICT r17 #5): compact when
-    * the live segment count exceeds `maxSegments` — the deployed-lifecycle
+  /** Compact when more than `maxSegments` segments are live, reaping the
+    * previous cycle's orphans first ([[SegmentedState.maybeCompact]]) — the
     * policy the streaming maintainer wires into its foreachBatch so a long
     * feed's per-query file opens stay O(probed cells), not O(triggers).
-    * Returns the compacted segment name when a compaction ran.
-    *
-    * Reaping is DEFERRED by one maintenance cycle (ADVICE r18): the
-    * [[vacuum]] here runs BEFORE the new compaction, so it deletes only
-    * segments orphaned by a PREVIOUS trigger's compact — never the
-    * directories a concurrent [[searchTopK]] resolved from the
-    * pre-compact manifest moments ago. An in-flight reader of the list
-    * this compaction retires gets a full maintenance cycle to drain
-    * before its directories disappear; the final compaction's orphans
-    * are reclaimed by the next over-threshold trigger or an explicit
-    * teardown [[vacuum]]. */
+    * Returns the compacted segment name when a compaction ran. */
   def maybeCompact(spark: SparkSession, root: String,
-      maxSegments: Int): Option[String] = {
-    require(maxSegments >= 1, s"maxSegments $maxSegments")
-    if (liveSegments(root).size <= maxSegments) None
-    else {
-      vacuum(root) // previous cycle's orphans only — this compact's survive
-      compact(spark, root)
-    }
-  }
+      maxSegments: Int): Option[String] =
+    SegmentedState.maybeCompact(Kind, root, maxSegments)(compact(spark, root))
 
   /** Pruned read of the VISIBLE rows across all live segments: each data
     * segment is its own partitioned relation (multi-root inference
@@ -285,7 +241,7 @@ object AnnIngest {
     // per-segment base frames come from the shared (session, dir) cache —
     // committed segments are immutable and names are never reused, so
     // schema inference + the partition-directory index build once per
-    // process, not per query (round 18, VERDICT r17 #5)
+    // process, not per query
     segs.map(sg => AnnIndex.baseFrame(spark, s"$root/$sg"))
       .reduce(_ unionByName _)
       .where(col("cell").isin(cells.map(Int.box): _*))
@@ -309,7 +265,7 @@ object AnnIngest {
       cells: Seq[Int]): Unit = {
     val want = java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString
     val scans = df.queryExecution.sparkPlan.collectLeaves().collect {
-      // separator-bounded match (ADVICE r17): a sibling root sharing the
+      // separator-bounded match: a sibling root sharing the
       // hex-name prefix must not be counted into the gate; tombstone
       // segment scans (id-sized broadcast side) are not cell-pruned reads
       case f: org.apache.spark.sql.execution.FileSourceScanExec
@@ -329,13 +285,13 @@ object AnnIngest {
   /** IVF top-k over the maintained index (frozen model), plan-gated.
     * The live segment list and the probed-cell union are each resolved
     * ONCE and shared between the read and the gate — no second manifest
-    * read or directory listing per query (round 18, VERDICT r17 #4). */
+    * read or directory listing per query. */
   def searchTopK(spark: SparkSession, root: String,
       cents: Array[Array[Double]], queries: DataFrame, k: Int,
       nprobe: Int): DataFrame =
     searchSegsTopK(spark, root, liveSegments(root), cents, queries, k, nprobe)
 
-  /** TIME-TRAVEL search (round 19b): top-k over the index AS OF manifest
+  /** TIME-TRAVEL search: top-k over the index AS OF manifest
     * commit `version` — the segment list [[StateManifest.at]] retained
     * for that commit, tombstones applied with the same batch-exact
     * ordering, both gates live. This is what makes a retrieval
@@ -388,10 +344,9 @@ object AnnIngest {
     out
   }
 
-  /** FILTERED IVF top-k over the MAINTAINED index (round 19, VERDICT r18
-    * #1): "live index + tenant/category filter" — the production
-    * retrieval composition that previously existed only against the
-    * frozen one-shot index. The metadata predicate `pred` is PUSHED into
+  /** FILTERED IVF top-k over the MAINTAINED index: "live index +
+    * tenant/category filter", the production retrieval composition. The
+    * metadata predicate `pred` is PUSHED into
     * the pruned live-segment union scan (row groups whose min/max
     * exclude the wanted values never decode — [[AnnIndex
     * .assertFilterPushed]] gates it per segment scan), and nprobe is

@@ -1,14 +1,13 @@
 package graft.api
 
 /** The single implementation of the write-then-point pointer-file commit
-  * every versioned-state directory in the engine relies on
-  * ([[IncrementalDedup]] segment list + batch ledger, [[MaterializedView]]
-  * current-version pointer): write the new content to a sibling `.tmp`,
-  * then atomically rename over the pointer. Readers see the old or the
-  * new pointer, never a torn one. Centralized because this is
+  * the [[StateManifest]] relies on (its `_MANIFEST` pointer and
+  * single-writer history files): write the new content to a sibling
+  * `.tmp`, then atomically rename over the pointer. Readers see the old or
+  * the new pointer, never a torn one. Centralized because this is
   * crash-safety-critical code — a future hardening (parent-dir fsync, a
   * fallback for filesystems without ATOMIC_MOVE) must reach every state
-  * store at once, not whichever copy someone remembered to patch. */
+  * store at once. */
 object AtomicFiles {
   def writePointer(p: java.nio.file.Path, content: String): Unit = {
     // writer-unique temp: with a FIXED temp name, two racing callers
@@ -26,9 +25,9 @@ object AtomicFiles {
   }
 
   /** Recursive directory delete (deepest-first; a missing entry is not an
-    * error). The ONE copy of the walk-and-reverse-delete loop every state
-    * lifecycle (segment vacuum, version GC) previously inlined — symlink
-    * or IO-error hardening lands here once, for all of them. */
+    * error). The ONE copy of the walk-and-reverse-delete loop that segment
+    * vacuum and version GC use — symlink or IO-error hardening lands here
+    * once, for all of them. */
   def rmTree(dir: java.nio.file.Path): Unit =
     if (java.nio.file.Files.isDirectory(dir)) {
       val walk = java.nio.file.Files.walk(dir)

@@ -10,8 +10,11 @@ import org.apache.spark.sql.functions._
   * LSH band keys, ~3 small columns per document × bands) is stored and
   * joined; the historical text never moves again.
   *
-  * Index layout (mirrors `streaming.IncrementalAgg`'s versioned-state
-  * pattern, adapted to append-only data):
+  * The index is a [[SegmentedState]] root: this object owns only the
+  * segment naming (`seg%05d`, one past the highest name on disk), the fold
+  * (`bkt` repartition, optional `dropDuplicates`) and the readers; the live
+  * list, append and compaction commits, vacuum and size-triggered
+  * compaction are the shared lifecycle.
   *
   * {{{
   *   root/seg00000/bkt=0/…/bkt=63/  parquet (id, band, bv) hash-bucketed
@@ -31,11 +34,11 @@ import org.apache.spark.sql.functions._
   * [[ingest]] is write-then-point: the increment's bands land in a new
   * segment directory FIRST, the returned decision frame reads only
   * already-written parquet (stable under later appends — no lazy recompute
-  * hazard), and the manifest advances last via atomic rename.
-  * A crash between write and point leaves an orphan directory that is
-  * never read — readers see either the old or the new index, never a torn
-  * one. On a real deployment the segment list is a Delta/Iceberg table and
-  * `ingest` is one transaction.
+  * hazard), and the manifest advances last. A crash between write and
+  * point leaves an orphan directory that is never read — readers see
+  * either the old or the new index, never a torn one. The index carries
+  * no batch ledger (callers such as the streaming ingest keep their own),
+  * so its in-flight directories are guarded from vacuum in-process only.
   *
   * Semantics: an increment document is a duplicate iff it shares ≥1 LSH
   * band bucket with any SMALLER-ID document already present (prior
@@ -76,21 +79,14 @@ object IncrementalDedup {
 
   private def bktCol = pmod(hash(col("band"), col("bv")), lit(IndexBuckets))
 
-  /** Live segment directory names, in ingest order — from the shared
-    * [[StateManifest]] (round 13: the `_SEGMENTS` list, IncrementalAgg's
-    * pointer pair, and MaterializedView's alternation now share ONE
-    * manifest code path). A pre-manifest state dir decodes through the
-    * legacy `_SEGMENTS` file read-only; the first ingest after an upgrade
-    * commits a manifest carrying the same list. */
-  def segments(root: String): Seq[String] =
-    StateManifest.current(root).map(_.segments).getOrElse(legacySegments(root))
-
-  private def legacySegments(root: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(root).resolve("_SEGMENTS")
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.readString(p).linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    else Seq.empty
+  private object Kind extends SegmentedState.Kind {
+    def onDisk(root: String): Seq[String] =
+      SegmentedState.children(root).filter(_.matches("seg\\d{5}"))
+    def batchOf(name: String): Option[Long] = None // names carry no batch id
   }
+
+  /** Live segment directory names, in ingest order. */
+  def segments(root: String): Seq[String] = SegmentedState.live(Kind, root)
 
   /** Time-travel read: the index as of manifest commit `version` — valid
     * until [[vacuum]] reclaims segments the current manifest no longer
@@ -122,34 +118,12 @@ object IncrementalDedup {
     else Some(segs.map(sg => spark.read.parquet(s"$root/$sg")).reduce(_.unionByName(_)))
   }
 
-  /** Ingest one increment: append its band keys `(id, band, bv)` (from
-    * [[TextDedup.minhashBands]]) as a new index segment and return the
-    * per-document decision frame
-    *
-    * {{{ (doc_id, n_prior BIGINT, keep BOOLEAN) }}}
-    *
-    * where `n_prior` counts distinct earlier documents sharing ≥1 band
-    * bucket and `keep ⟺ n_prior = 0`. The decision frame is lazy and
-    * entirely parquet-backed — evaluating it later (or never: an initial
-    * history bootstrap can ignore it and pay only the segment write) is
-    * safe regardless of subsequent ingests.
-    *
-    * Coverage contract: decisions cover exactly the document ids PRESENT
-    * in `incBands`. A document yielding no fingerprints (shorter than the
-    * shingle width) never appears here and trivially keeps — it has
-    * nothing to collide on. Callers that own the full document set
-    * compensate with a left join defaulting to (n_prior=0, keep=true)
-    * ([[graft.streaming.StreamIncrDedup.ingestBatch]] and the
-    * `q_incr_dedup` oracle row both do). An increment with zero bands is
-    * legal: it writes an empty (orphaned, vacuumable) segment, returns an
-    * empty frame, and leaves the index untouched. */
   /** Next unused segment name: one past the highest `seg*` directory ON
     * DISK — not the live-list length, because [[compactIndex]] shrinks the
     * list while orphan directories linger until [[vacuum]], and a name
     * collision with an orphan would fail the ingest write. */
   private def nextSegName(root: String): String = {
-    val existing = Option(new java.io.File(root).list())
-      .getOrElse(Array.empty[String]).filter(_.matches("seg\\d{5}"))
+    val existing = Kind.onDisk(root)
     val next = if (existing.isEmpty) 0 else existing.map(_.drop(3).toInt).max + 1
     f"seg$next%05d"
   }
@@ -173,31 +147,33 @@ object IncrementalDedup {
     name
   }
 
-  /** Per-root writer/vacuum arbitration: [[ingest]] and [[compactIndex]]
-    * hold the READ side from segment claim through manifest commit;
-    * [[vacuum]] holds the WRITE side. Vacuum's not-in-live-list scan
-    * cannot distinguish a crash orphan from a segment an IN-FLIGHT writer
-    * has claimed but not yet committed — unserialized, it would delete
-    * data whose manifest commit lands moments later, leaving a live list
-    * pointing at a vanished directory. In-process only, matching the
-    * documented maintenance contract (cross-process, vacuum keeps the
-    * Delta-VACUUM single-maintainer role and a retention window). */
-  private val rootLocks = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.locks.ReentrantReadWriteLock]()
-  private def lockFor(root: String) =
-    rootLocks.computeIfAbsent(
-      java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString,
-      _ => new java.util.concurrent.locks.ReentrantReadWriteLock())
-  private def withLock[T](l: java.util.concurrent.locks.Lock)(f: => T): T = {
-    l.lock(); try f finally l.unlock()
-  }
-
+  /** Ingest one increment: append its band keys `(id, band, bv)` (from
+    * [[TextDedup.minhashBands]]) as a new index segment and return the
+    * per-document decision frame
+    *
+    * {{{ (doc_id, n_prior BIGINT, keep BOOLEAN) }}}
+    *
+    * where `n_prior` counts distinct earlier documents sharing ≥1 band
+    * bucket and `keep ⟺ n_prior = 0`. The decision frame is lazy and
+    * entirely parquet-backed — evaluating it later (or never: an initial
+    * history bootstrap can ignore it and pay only the segment write) is
+    * safe regardless of subsequent ingests.
+    *
+    * Coverage contract: decisions cover exactly the document ids PRESENT
+    * in `incBands`. A document yielding no fingerprints (shorter than the
+    * shingle width) never appears here and trivially keeps — it has
+    * nothing to collide on. Callers that own the full document set
+    * compensate with a left join defaulting to (n_prior=0, keep=true)
+    * ([[graft.streaming.StreamIncrDedup.ingestBatch]] and the
+    * `q_incr_dedup` oracle row both do). An increment with zero bands is
+    * legal: it writes an empty (orphaned, vacuumable) segment, returns an
+    * empty frame, and leaves the index untouched. */
   def ingest(spark: SparkSession, root: String, incBands: DataFrame,
       maxBucket: Int = 10000, distinctCensus: Boolean = false): DataFrame =
-      withLock(lockFor(root).readLock()) {
+      SegmentedState.writing(root) {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
     val cur0 = StateManifest.current(root)
-    val prior = cur0.map(_.segments).getOrElse(legacySegments(root))
+    val prior = cur0.map(_.segments).getOrElse(Nil)
     val segName = claimSeg(root)
     // cluster by bkt before the partitioned write: without it every write
     // task emits one file PER bucket it holds (tasks × buckets files — ~2k
@@ -205,18 +181,9 @@ object IncrementalDedup {
     // at sf0.1, all committer/footer overhead). Clustered, a segment is
     // ≤ IndexBuckets files — the layout a 1000-executor ingest wants too:
     // file count scales with the bucket count, not the task count.
-    def sub[T](name: String)(body: => T): T =
-      if (!sys.env.contains("GRAFT_INCR_DEDUP_SUBPROFILE")) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        System.err.println(
-          f"[incr-dedup-sub] $name ${(System.nanoTime() - t0) / 1e9}%.3fs")
-        r
-      }
     val incProjected = incBands.select("id", "band", "bv").withColumn("bkt", bktCol)
-    sub("seg_write") { incProjected.repartition(col("bkt"))
-      .write.mode("overwrite").partitionBy("bkt").parquet(s"$root/$segName") }
+    incProjected.repartition(col("bkt"))
+      .write.mode("overwrite").partitionBy("bkt").parquet(s"$root/$segName")
 
     // explicit schema: an increment can legitimately carry ZERO bands (a
     // micro-batch of documents all shorter than the shingle width writes
@@ -230,8 +197,8 @@ object IncrementalDedup {
     // values (model-sized collect), and bkt is a function of (band, bv),
     // so untouched partitions cannot contain a matching bucket — neither
     // for the join nor for the flood-guard census.
-    val touched = sub("touched_census") { inc.select("bkt").distinct().collect()
-      .map(r => Integer.valueOf(r.getInt(0))).toSeq }
+    val touched = inc.select("bkt").distinct().collect()
+      .map(r => Integer.valueOf(r.getInt(0))).toSeq
     val stored = if (prior.isEmpty) None
                  else Some(prior.map(sg => spark.read.schema(segSchema).parquet(s"$root/$sg"))
                    .reduce(_.unionByName(_))
@@ -268,166 +235,70 @@ object IncrementalDedup {
 
     // an empty segment carries no information: leave it OFF the live list
     // (the claimed directory becomes a vacuumable orphan) so index readers
-    // never meet a file-less directory. Commit through the shared
-    // manifest: segment list + schema fingerprint move in one atomic
-    // rename, and a recorded fingerprint that no longer matches the
-    // increment refuses loudly instead of interleaving incompatible
-    // parquet under one root.
-    if (touched.nonEmpty) {
-      val fp = StateManifest.schemaFingerprint(segSchema)
-      cur0.map(_.schemaFp).filter(f => f.nonEmpty && f != fp).foreach { f =>
-        throw new IllegalStateException(
-          s"index schema drift at $root: manifest=$f increment=$fp")
-      }
-      // optimistic commit: a MAINTENANCE commit (compaction) racing this
-      // ingest preserves the index CONTENT, so the decisions stay valid —
-      // on conflict, re-read the advanced manifest, RE-CHECK schema drift
-      // against it (a racing writer may have recorded a fingerprint cur0
-      // never saw), and append this segment to ITS live list. Under the
-      // old last-write-wins pointer one of the two lists was dropped.
-      var cur = cur0
-      var attempts = 0
-      while (StateManifest.commitIf(root,
-          cur.map(_.version),
-          cur.map(_.segments).getOrElse(prior) :+ segName,
-          cur.map(_.lastBatch).getOrElse(-1L), fp).isEmpty) {
-        attempts += 1
-        if (attempts > 20) throw new IllegalStateException(
-          s"ingest at $root could not commit after $attempts conflicts")
-        val next = StateManifest.current(root)
-        next.map(_.schemaFp).filter(f => f.nonEmpty && f != fp).foreach { f =>
-          throw new IllegalStateException(
-            s"index schema drift at $root: manifest=$f increment=$fp")
-        }
-        if (next.map(_.version) == cur.map(_.version)) {
-          // version did not advance: the blocker is an INCOMPLETE file on
-          // the next version's name (a stale claim from the pre-link
-          // protocol, or a torn external write) — under the link protocol
-          // a live racer's commit always advances the version. Waiting
-          // cannot help — reclaim it to restore liveness. Safe against
-          // every live writer: reclaimOrphans deletes only
-          // parse-incomplete files, and a commit only ever appears as a
-          // complete file (atomic link), so nothing reclaimed can be or
-          // become a commit.
-          Thread.sleep(100L * math.min(attempts, 5))
-          if (StateManifest.current(root).map(_.version) == cur.map(_.version))
-            StateManifest.reclaimOrphans(root)
-        }
-        cur = StateManifest.current(root)
-      }
-    }
+    // never meet a file-less directory. A racing compaction keeps the
+    // index CONTENT, so these decisions stay valid when the append
+    // re-applies onto its list.
+    if (touched.nonEmpty)
+      SegmentedState.publish(root, cur0, None,
+        StateManifest.schemaFingerprint(segSchema))(_ :+ segName)
     decisions
   }
 
-  /** Compact all live segments into ONE consolidated segment and point
-    * `_SEGMENTS` at it. Pure layout maintenance: the merged segment holds
-    * exactly the union of the live rows (same `bkt` values — `bkt` is a
-    * function of the data, so no re-hash), and every subsequent ingest
-    * decision is unchanged — `q_incr_dedup` runs a compact MID-SEQUENCE
-    * and still hash-matches the whole-corpus oracle.
+  /** Compact all live segments into ONE consolidated segment. Pure
+    * layout maintenance: the merged segment holds exactly the union of the
+    * live rows (same `bkt` values — `bkt` is a function of the data, so no
+    * re-hash), and every subsequent ingest decision is unchanged —
+    * `q_incr_dedup` runs a compact MID-SEQUENCE and still hash-matches the
+    * whole-corpus oracle.
     *
     * Why it matters at scale: without compaction an ingest-per-hour index
     * accumulates one directory tree per ingest, and a pruned read costs
     * O(#segments) file opens per touched bucket. Compacted, each `bkt=`
     * directory holds ONE file again, so pruned-read cost returns to
-    * O(touched buckets) no matter how many ingests preceded. Same
-    * write-then-point discipline as [[ingest]]: readers see the old or the
-    * new list, never a torn one. Old directories become orphans — still
-    * readable by decision frames created BEFORE the compact — and are
-    * reclaimed later by [[vacuum]]; production maps this to a retention
-    * window (vacuum only segments older than the longest-running reader).
+    * O(touched buckets) no matter how many ingests preceded. Old
+    * directories stay readable by decision frames created before the
+    * compact until [[vacuum]].
     *
     * Returns the new segment name; None when ≤1 segment is live or when
-    * a concurrent ingest advanced the manifest mid-compaction (the
-    * optimistic commit aborts rather than dropping the fresh segment —
-    * re-run on the new snapshot). */
+    * a concurrent ingest committed mid-compaction (re-run on the new
+    * list). */
   def compactIndex(spark: SparkSession, root: String,
       dedupRows: Boolean = true): Option[String] =
-      withLock(lockFor(root).readLock()) {
-    val cur = StateManifest.current(root)
-    val prior = cur.map(_.segments).getOrElse(legacySegments(root))
-    if (prior.size <= 1) None
-    else {
-      val segName = claimSeg(root)
-      val merged =
-        prior.map(sg => spark.read.parquet(s"$root/$sg")).reduce(_.unionByName(_))
-      // drop exact row duplicates: a crash-window replay of a streaming
-      // ingest (StreamIncrDedup) can double-append a batch's fingerprints,
-      // which never changes a verdict but inflates the flood-guard's
-      // row-count census — compaction is where the true census is restored.
-      // `dedupRows = false` (optimization round 19) lets a caller whose
-      // ingest protocol PROVABLY never double-appends (driver-sequential
-      // ingests, no replay window — e.g. the q_incr_dedup batch lifecycle)
-      // skip the dropDuplicates exchange: the merged rows are then already
-      // unique ((id, band) is unique within a segment by minhashBands
-      // construction, and sequential ingests never repeat an id), so the
-      // pass is a full extra shuffle + aggregate of the whole index for
-      // nothing (guide §2.4 "a distinct on data that is already unique").
-      // Streaming maintainers keep the default.
-      val rows = if (dedupRows) merged.dropDuplicates("id", "band", "bv") else merged
-      rows.repartition(col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt").parquet(s"$root/$segName")
-      // optimistic commit: if an ingest advanced the manifest while this
-      // compaction ran, committing the stale snapshot would DROP the fresh
-      // segment from the live list — abort instead (the claimed directory
-      // becomes a vacuumable orphan) and let the caller retry on the new
-      // snapshot. Maintenance must never lose an ingest the race.
-      StateManifest.commitIf(root, cur.map(_.version), Seq(segName),
-        cur.map(_.lastBatch).getOrElse(-1L),
-        cur.map(_.schemaFp).getOrElse("")).map(_ => segName)
+    SegmentedState.compact(root) { cur =>
+      if (cur.segments.size <= 1) None
+      else {
+        val segName = claimSeg(root)
+        val merged = cur.segments.map(sg => spark.read.parquet(s"$root/$sg"))
+          .reduce(_.unionByName(_))
+        // drop exact row duplicates: a crash-window replay of a streaming
+        // ingest (StreamIncrDedup) can double-append a batch's fingerprints,
+        // which never changes a verdict but inflates the flood-guard's
+        // row-count census — compaction is where the true census is
+        // restored. `dedupRows = false` lets a caller whose ingest protocol
+        // PROVABLY never double-appends (driver-sequential ingests, no
+        // replay window — e.g. the q_incr_dedup batch lifecycle) skip the
+        // dropDuplicates exchange: the merged rows are then already unique
+        // ((id, band) is unique within a segment by minhashBands
+        // construction, and sequential ingests never repeat an id), so the
+        // pass would be a full extra shuffle + aggregate of the whole index
+        // for nothing. Streaming maintainers keep the default.
+        val rows = if (dedupRows) merged.dropDuplicates("id", "band", "bv") else merged
+        rows.repartition(col("bkt"))
+          .write.mode("overwrite").partitionBy("bkt").parquet(s"$root/$segName")
+        Some(Seq(segName) -> segName)
+      }
     }
-  }
 
-  /** Delete segment directories no longer referenced by the CURRENT
-    * manifest (the orphans left by [[compactIndex]], an aborted optimistic
-    * commit, or a crash between segment write and manifest advance).
-    * Destroys data that lazy decision frames created before the compact
-    * may still reference — run it only after those are evaluated
-    * (production: after a retention window). Manifest history versions
-    * that reference a vacuumed segment are pruned too, so [[indexAt]]
-    * answers None for them instead of failing at evaluation time.
-    * Returns the deleted segment names. */
-  def vacuum(root: String): Seq[String] =
-      withLock(lockFor(root).writeLock()) {
-    val live = segments(root).toSet
-    val dir = java.nio.file.Paths.get(root)
-    val orphans = Option(dir.toFile.list()).getOrElse(Array.empty[String])
-      .filter(n => n.matches("seg\\d{5}") && !live.contains(n)).toSeq.sorted
-    orphans.foreach(n => AtomicFiles.rmTree(dir.resolve(n)))
-    if (orphans.nonEmpty) {
-      val gone = orphans.toSet
-      val cur = StateManifest.current(root).map(_.version).getOrElse(-1L)
-      StateManifest.versions(root)
-        .filter(v => v != cur && StateManifest.at(root, v)
-          .exists(_.segments.exists(gone.contains)))
-        .foreach(v => java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(root).resolve(s"_MANIFEST.v$v")))
-    }
-    orphans
-  }
+  /** Delete segment directories the current manifest no longer lists (see
+    * [[SegmentedState.vacuum]]); [[indexAt]] then answers None for the
+    * versions that referenced them. Returns the deleted names. */
+  def vacuum(root: String): Seq[String] = SegmentedState.vacuum(Kind, root)
 
-  /** Size-triggered maintenance (round 19, VERDICT r18 #2 — lifecycle
-    * parity with [[AnnIngest.maybeCompact]] / [[IncrementalJoinAgg
-    * .maybeCompactHistory]]): compact when the live segment count exceeds
-    * `maxSegments`, so a continuous dedup feed's pruned-read cost stays
-    * O(touched buckets) instead of O(triggers) without the caller having
-    * to remember a compaction cadence. Returns the compacted segment
-    * name when a compaction ran.
-    *
-    * Reaping is DEFERRED one maintenance cycle (the ADVICE r18
-    * discipline): the [[vacuum]] runs BEFORE the new compaction, deleting
-    * only segments a PREVIOUS trigger's compact orphaned — a decision
-    * frame still draining against the pre-compact segment list gets a
-    * full cycle before its directories disappear. The final compaction's
-    * orphans fall to the next over-threshold trigger or an explicit
-    * teardown [[vacuum]]. */
+  /** Compact when more than `maxSegments` segments are live, reaping the
+    * previous cycle's orphans first ([[SegmentedState.maybeCompact]]), so
+    * a continuous feed's pruned-read cost stays O(touched buckets).
+    * Returns the compacted segment name when a compaction ran. */
   def maybeCompact(spark: SparkSession, root: String,
-      maxSegments: Int): Option[String] = {
-    require(maxSegments >= 1, s"maxSegments $maxSegments")
-    if (segments(root).size <= maxSegments) None
-    else {
-      vacuum(root) // previous cycle's orphans only — this compact's survive
-      compactIndex(spark, root)
-    }
-  }
+      maxSegments: Int): Option[String] =
+    SegmentedState.maybeCompact(Kind, root, maxSegments)(compactIndex(spark, root))
 }

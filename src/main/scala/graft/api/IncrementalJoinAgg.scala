@@ -3,12 +3,11 @@ package graft.api
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Incremental maintenance for Aggregate-over-JOIN materialized views —
-  * the WRITE path [[MaterializedView]] was missing for join definitions
-  * (r15 verdict #3): [[graft.api.IncrementalJoin]] owns the delta rule
-  * for the join, [[graft.streaming.IncrementalAgg]] owns the
-  * partial-merge protocol for the aggregate; this composes them so a
-  * star-join view advances at O(Δ ⋈ history) per step instead of a full
-  * `refresh` from base.
+  * the WRITE path of [[MaterializedView]] join definitions:
+  * [[graft.api.IncrementalJoin]] owns the delta rule for the join,
+  * [[graft.streaming.IncrementalAgg]] owns the partial-merge protocol for
+  * the aggregate; this composes them so a star-join view advances at
+  * O(Δ ⋈ history) per step instead of a full `refresh` from base.
   *
   * Per applied batch (ΔA, ΔB):
   *
@@ -21,9 +20,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * batchings) — the join rows themselves never materialize beyond the
   * delta terms, and nothing ever joins A_full ⋈ B_full after bootstrap.
   *
-  * State layout under `root` (all commits through the shared
-  * [[StateManifest]] — version pointer, batch ledger, and schema
-  * fingerprint advance in ONE atomic rename):
+  * The history is a [[SegmentedState]] root: this object owns only the
+  * naming, the per-side fold and the readers; the live list, the ledgered
+  * append commit, the compaction commit, vacuum and size-triggered
+  * compaction are the shared lifecycle. Names under `root`:
   *
   *   - `a/b<id>/`, `b/b<id>/` — each side's delta, written once per
   *     applied batch. The accumulated side reads the UNION of the
@@ -36,14 +36,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     buckets)`. Without it a batch-per-hour view accumulates one
   *     directory per batch and every step's cross terms pay O(#batches)
   *     listings/opens; compacted, the history side is ONE key-clustered
-  *     layout again (the `IncrementalDedup.compactIndex` pattern — old
-  *     directories become orphans for [[vacuumHistory]]).
+  *     layout again.
   *   - `v<id>/` — the merged view partials (group-sized, the only
   *     O(|state|) write per step).
   *
   * The manifest's segment list is `viewVersion +: side segments` — one
   * atomic CAS covers the view pointer AND both sides' live history, so
-  * a reader never sees a compaction half-applied.
+  * a reader never sees a compaction half-applied. The view version sits
+  * outside the lifecycle's tracked list: [[applyBatch]] retires old
+  * versions itself.
   *
   * Exactly-once: a replay of an applied `batchId` is a no-op (ledger
   * check), and a replay of a CRASHED batch overwrites its own delta and
@@ -63,31 +64,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IncrementalJoinAgg {
 
-  private def lastApplied(root: String): Long =
-    StateManifest.current(root).map(_.lastBatch).getOrElse(-1L)
+  private val Sides = Seq("a", "b")
+
+  private object Kind extends SegmentedState.Kind {
+    override def tracked(m: Manifest): Seq[String] = m.segments.drop(1)
+    def onDisk(root: String): Seq[String] =
+      Sides.flatMap(s => SegmentedState.children(s"$root/$s").map(n => s"$s/$n"))
+    def batchOf(name: String): Option[Long] = histId(name)
+    override def depth(live: Seq[String]): Int =
+      Sides.map(s => live.count(_.startsWith(s"$s/"))).max
+  }
 
   /** The stored view partials, or None before the first applied batch. */
   def state(spark: SparkSession, root: String): Option[DataFrame] =
     StateManifest.current(root).flatMap(_.segments.headOption)
       .map(v => spark.read.parquet(s"$root/$v"))
 
-  /** One side's live history segments (manifest tail entries `side/...`).
-    * Legacy roots committed before segment tracking fall back to the
-    * directory listing filtered by the batch ledger — their next applied
-    * batch folds the derived list into the manifest. */
-  private[graft] def liveSegments(root: String, side: String): Seq[String] = {
-    val fromManifest = StateManifest.current(root).toSeq
-      .flatMap(_.segments.drop(1)).filter(_.startsWith(s"$side/"))
-    if (fromManifest.nonEmpty) fromManifest
-    else {
-      val last = lastApplied(root)
-      Option(new java.io.File(s"$root/$side").list())
-        .getOrElse(Array.empty[String])
-        .filter(n => n.startsWith("b") &&
-          n.drop(1).toLongOption.exists(_ <= last))
-        .sorted.map(n => s"$side/$n").toIndexedSeq
-    }
-  }
+  /** One side's live history segments (manifest tail entries `side/...`). */
+  private[graft] def liveSegments(root: String, side: String): Seq[String] =
+    SegmentedState.live(Kind, root).filter(_.startsWith(s"$side/"))
 
   /** One side's accumulated committed history: the union of its live
     * segments (delta dirs + at most one compacted layout; the `__bkt`
@@ -110,56 +105,56 @@ object IncrementalJoinAgg {
   def applyBatch(dA: DataFrame, dB: DataFrame, batchId: Long, root: String)(
       join: (DataFrame, DataFrame) => DataFrame,
       partialsOf: DataFrame => DataFrame,
-      merge: (DataFrame, DataFrame) => DataFrame): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    if (batchId <= lastApplied(root)) return // replay of an applied batch
-    val spark = dA.sparkSession
-    // accumulators resolve BEFORE this batch's directories land (the
-    // ledger filter makes that true even on crash-replay)
-    val aPrev = accumulated(spark, root, "a")
-    val bPrev = accumulated(spark, root, "b")
-    dA.write.mode("overwrite").parquet(s"$root/a/b$batchId")
-    dB.write.mode("overwrite").parquet(s"$root/b/b$batchId")
-    val deltaJ = deltaRule(spark, root, batchId, aPrev, bPrev, join)
-    val partials = partialsOf(deltaJ)
-    val merged = state(spark, root) match {
-      case Some(prev) => merge(prev, partials)
-      case None => partials
-    }
-    val prevVersion = StateManifest.current(root).flatMap(_.segments.headOption)
-    val version = s"v$batchId"
-    merged.write.mode("overwrite").parquet(s"$root/$version")
-    val fp = StateManifest.schemaFingerprint(merged.schema)
-    StateManifest.current(root).map(_.schemaFp)
-      .filter(f => f.nonEmpty && f != fp).foreach { f =>
-        throw new IllegalStateException(
-          s"state schema drift at $root: manifest=$f batch=$fp")
+      merge: (DataFrame, DataFrame) => DataFrame): Unit =
+      SegmentedState.writing(root) {
+    val base = StateManifest.current(root)
+    if (!base.exists(_.lastBatch >= batchId)) {
+      val spark = dA.sparkSession
+      // accumulators resolve from the manifest BEFORE this batch's
+      // directories land, so a crash-replay sees the same frames
+      val aPrev = accumulated(spark, root, "a")
+      val bPrev = accumulated(spark, root, "b")
+      dA.write.mode("overwrite").parquet(s"$root/a/b$batchId")
+      dB.write.mode("overwrite").parquet(s"$root/b/b$batchId")
+      val deltaJ = deltaRule(spark, root, batchId, aPrev, bPrev, join)
+      val partials = partialsOf(deltaJ)
+      val merged = state(spark, root) match {
+        case Some(prev) => merge(prev, partials)
+        case None => partials
       }
-    // data first — deltas AND view version — then the one atomic commit;
-    // a crash anywhere before it replays the batch against the old
-    // manifest and no partial state is ever visible. The committed list
-    // carries both sides' live history so a reader never needs to trust
-    // a directory listing (crash orphans stay invisible).
-    val sideSegs = Seq("a", "b").flatMap { s =>
-      val prev = liveSegments(root, s)
-      val mine = s"$s/b$batchId"
-      if (prev.contains(mine)) prev else prev :+ mine
+      val prevVersion = base.flatMap(_.segments.headOption)
+      val version = s"v$batchId"
+      merged.write.mode("overwrite").parquet(s"$root/$version")
+      // data first — deltas AND view version — then the one atomic commit;
+      // a crash anywhere before it replays the batch against the old
+      // manifest and no partial state is ever visible. The committed list
+      // carries both sides' live history so a reader never needs to trust
+      // a directory listing (crash orphans stay invisible).
+      val published = SegmentedState.publish(root, base, Some(batchId),
+          StateManifest.schemaFingerprint(merged.schema)) { live =>
+        version +: Sides.flatMap { s =>
+          val prev = live.drop(1).filter(_.startsWith(s"$s/"))
+          val mine = s"$s/b$batchId"
+          if (prev.contains(mine)) prev else prev :+ mine
+        }
+      }
+      if (published) {
+        StateManifest.pruneHistory(root, keep = 2)
+        // GC view versions like IncrementalAgg (current + previous = one
+        // commit of time travel); delta directories are the accumulated
+        // history itself and are retained — they ARE the view's base
+        val retain = Set(version) ++ prevVersion
+        SegmentedState.children(root)
+          .filter(n => n.startsWith("v") && !retain.contains(n))
+          .foreach(v => AtomicFiles.rmTree(java.nio.file.Paths.get(root).resolve(v)))
+      }
     }
-    StateManifest.commit(root, version +: sideSegs, batchId, fp)
-    StateManifest.pruneHistory(root, keep = 2)
-    // GC view versions like IncrementalAgg (current + previous = one
-    // commit of time travel); delta directories are the accumulated
-    // history itself and are retained — they ARE the view's base
-    val retain = Set(version) ++ prevVersion
-    Option(new java.io.File(root).list()).getOrElse(Array.empty[String])
-      .filter(n => n.startsWith("v") && !retain.contains(n))
-      .foreach(v => AtomicFiles.rmTree(java.nio.file.Paths.get(root).resolve(v)))
   }
 
   /** The per-step delta rule `ΔA ⋈ B_acc ∪ A_acc ⋈ ΔB ∪ ΔA ⋈ ΔB`, with
     * the DELTA side of each cross term PINNED as the broadcast build side
     * whenever its just-written directory fits the session broadcast
-    * budget (round 18, VERDICT r17 #6).
+    * budget.
     *
     * Why pinning, not stats: left to size estimates the planner builds on
     * whichever relation is smaller TODAY — measured on the JoinMvBench
@@ -186,7 +181,7 @@ object IncrementalJoinAgg {
     val budget = spark.sessionState.conf.autoBroadcastJoinThreshold
     // autoBroadcastJoinThreshold budgets the IN-MEMORY relation; parquet
     // bytes under-count it by the compression + encoding ratio (commonly
-    // 2-4x). Compare at a 4x inflation (ADVICE r18) so a delta near the
+    // 2-4x). Compare at a 4x inflation so a delta near the
     // threshold can't force-broadcast at a multiple of the intended
     // budget — an over-sized delta falls back to the planner's choice.
     def pin(df: DataFrame, dir: String): DataFrame =
@@ -210,10 +205,12 @@ object IncrementalJoinAgg {
     deltaRule(spark, root, batchId,
       accumulated(spark, root, "a"), accumulated(spark, root, "b"), join)
 
+  /** Fold one side's live segments `live` into `side/c<ledger>`, or None
+    * when there is nothing to fold. */
   private def compactSide(spark: SparkSession, root: String, side: String,
-      keys: Seq[String], buckets: Int): Option[String] = {
+      live: Seq[String], ledger: Long, keys: Seq[String],
+      buckets: Int): Option[String] = {
     import org.apache.spark.sql.functions._
-    val live = liveSegments(root, side)
     if (live.size <= 1) None
     else {
       val df = live.map(sg => spark.read.parquet(s"$root/$sg").drop("__bkt"))
@@ -223,7 +220,7 @@ object IncrementalJoinAgg {
       // reader can open, and there is nothing to cluster anyway
       if (df.isEmpty) None
       else {
-        val name = s"$side/c${lastApplied(root)}"
+        val name = s"$side/c$ledger"
         df.withColumn("__bkt", pmod(hash(keys.map(col): _*), lit(buckets)))
           .repartition(col("__bkt"))
           .write.mode("overwrite").partitionBy("__bkt").parquet(s"$root/$name")
@@ -237,99 +234,49 @@ object IncrementalJoinAgg {
     * buckets)`. Pure layout maintenance: the compacted segment holds
     * exactly the union of the live rows, so not one maintenance decision
     * or stored partial changes (MaintenanceSpec runs a compact
-    * MID-SEQUENCE and pins prefix parity after every later step — the
-    * q_incr_dedup precedent). `keyA`/`keyB` are each side's join-key
-    * columns; the clustering makes the history side arrive pre-grouped
-    * by key for any later co-located read.
+    * MID-SEQUENCE and pins prefix parity after every later step).
+    * `keyA`/`keyB` are each side's join-key columns; the clustering makes
+    * the history side arrive pre-grouped by key for any later co-located
+    * read.
     *
-    * Same optimistic CAS as [[IncrementalDedup.compactIndex]]: the commit
-    * aborts (None, claimed dirs become vacuumable orphans) if a concurrent
-    * batch advanced the manifest mid-compaction — maintenance must never
-    * lose a batch the race. Returns the new segment names, or None when
-    * neither side had anything to compact. Old directories stay readable
-    * for frames created before the compact until [[vacuumHistory]]. */
+    * Committed by [[SegmentedState.compact]]: None if a batch committed
+    * mid-compaction (the folded dirs become vacuumable orphans). Returns
+    * the new segment names, or None when neither side had anything to
+    * compact. Old directories stay readable for frames created before
+    * the compact until [[vacuumHistory]]. */
   def compactHistory(spark: SparkSession, root: String, keyA: Seq[String],
       keyB: Seq[String], buckets: Int = 32): Option[Seq[String]] =
-    // the per-root maintenance lock keeps a concurrent vacuumHistory from
-    // deleting the half-written compacted directories before the CAS
-    // commit decides their fate (ADVICE r17); applyBatch never takes the
-    // lock — its in-flight deltas are protected by the batch-id guard
-    StateManifest.withMaintenanceLock(root) {
-      val cur = StateManifest.current(root)
-      if (cur.isEmpty) None
-      else {
-        val view = cur.get.segments.headOption.toSeq
-        val ca = compactSide(spark, root, "a", keyA, buckets)
-        val cb = compactSide(spark, root, "b", keyB, buckets)
-        if (ca.isEmpty && cb.isEmpty) None
-        else {
-          val segs = view ++
-            ca.map(Seq(_)).getOrElse(liveSegments(root, "a")) ++
-            cb.map(Seq(_)).getOrElse(liveSegments(root, "b"))
-          StateManifest.commitIf(root, cur.map(_.version), segs,
-            cur.get.lastBatch, cur.get.schemaFp)
-            .map(_ => ca.toSeq ++ cb.toSeq)
-        }
+    SegmentedState.compact(root) { cur =>
+      val sides = Sides.zip(Seq(keyA, keyB)).map { case (s, keys) =>
+        val live = Kind.tracked(cur).filter(_.startsWith(s"$s/"))
+        (live, compactSide(spark, root, s, live, cur.lastBatch, keys, buckets))
       }
-    }.flatten
+      val made = sides.flatMap(_._2)
+      if (made.isEmpty) None
+      else Some((cur.segments.take(1) ++
+        sides.flatMap { case (live, c) => c.map(Seq(_)).getOrElse(live) }) -> made)
+    }
 
   /** The numeric id of a history name (`side/b<id>` / `side/c<id>`). */
   private def histId(name: String): Option[Long] =
     name.dropWhile(_ != '/').drop(2).toLongOption
 
-  /** Delete history directories the CURRENT manifest no longer references
-    * (orphans from [[compactHistory]], an aborted CAS, or a crash between
-    * delta write and commit). Destroys data lazy frames created before
-    * the compact may still reference — run after those are evaluated
-    * (production: after a retention window). Returns deleted names.
-    *
-    * Concurrent-writer guards (ADVICE r17): a delta directory whose
-    * batch id exceeds the manifest ledger belongs to an in-flight
-    * [[applyBatch]] that has written but not yet committed — skipped;
-    * and the pass holds the per-root maintenance lock shared with
-    * [[compactHistory]] so an in-flight compaction (id ≤ ledger) is
-    * protected by mutual exclusion. */
-  def vacuumHistory(root: String): Seq[String] =
-    StateManifest.withMaintenanceLock(root) {
-      val m = StateManifest.current(root)
-      val live = m.toSeq.flatMap(_.segments.drop(1)).toSet
-      val last = m.map(_.lastBatch).getOrElse(-1L)
-      // a legacy manifest (no tracked side segments) gives no authority to
-      // distinguish live history from orphans — refuse rather than destroy
-      if (live.isEmpty) Nil
-      else {
-        val gone = Seq("a", "b").flatMap { side =>
-          Option(new java.io.File(s"$root/$side").list())
-            .getOrElse(Array.empty[String])
-            .map(n => s"$side/$n")
-            .filterNot(live.contains)
-            .filter(n => histId(n).forall(_ <= last)) // in-flight: not ours
-        }.sorted
-        gone.foreach(n => AtomicFiles.rmTree(java.nio.file.Paths.get(root).resolve(n)))
-        gone
-      }
-    }.getOrElse(Nil)
+  /** Delete history directories the current manifest no longer lists
+    * ([[SegmentedState.vacuum]]): a delta whose batch id is above the
+    * ledger belongs to an [[applyBatch]] still in flight and is skipped,
+    * and a manifest tracking no side segment is refused. Run after frames
+    * created before the compact are evaluated. Returns deleted names. */
+  def vacuumHistory(root: String): Seq[String] = SegmentedState.vacuum(Kind, root)
 
-  /** Size-triggered maintenance (round 18, VERDICT r17 #5): compact +
-    * vacuum when either side's live segment count exceeds `maxSegments`
-    * — the deployed-lifecycle policy [[graft.streaming.StreamJoinAggView]]
-    * wires into its foreachBatch so a long CDC feed's per-step history
-    * read stays O(1) directories per side, not O(batches). */
+  /** Compact when either side has more than `maxSegments` live segments,
+    * reaping the previous cycle's orphans first
+    * ([[SegmentedState.maybeCompact]]) — the policy
+    * [[graft.streaming.StreamJoinAggView]] wires into its foreachBatch so
+    * a long CDC feed's per-step history read stays O(1) directories per
+    * side, not O(batches). */
   def maybeCompactHistory(spark: SparkSession, root: String,
       keyA: Seq[String], keyB: Seq[String], maxSegments: Int,
-      buckets: Int = 32): Option[Seq[String]] = {
-    require(maxSegments >= 1, s"maxSegments $maxSegments")
-    val over = Seq("a", "b").exists(s => liveSegments(root, s).size > maxSegments)
-    if (!over) None
-    else {
-      // Deferred reaping (ADVICE r18): vacuum BEFORE the new compaction,
-      // so only a PREVIOUS trigger's orphans are deleted — a concurrent
-      // reader (state()/deltaRule resolution) holding the pre-compact
-      // directory list gets a full maintenance cycle to drain before its
-      // directories disappear. The final compaction's orphans fall to the
-      // next over-threshold trigger or an explicit vacuumHistory.
-      vacuumHistory(root)
-      compactHistory(spark, root, keyA, keyB, buckets)
-    }
-  }
+      buckets: Int = 32): Option[Seq[String]] =
+    SegmentedState.maybeCompact(Kind, root, maxSegments)(
+      compactHistory(spark, root, keyA, keyB, buckets))
 }

@@ -9,11 +9,10 @@ final case class Manifest(
 
 /** THE single manifest format for every versioned-parquet state directory
   * in the engine — the credible Delta/Iceberg stand-in SCALE.md §C
-  * promises. Before round 13, [[IncrementalDedup]]'s `_SEGMENTS` list,
-  * [[graft.streaming.IncrementalAgg]]'s `_CURRENT`+`_LAST_BATCH` pointer
-  * pair, and [[MaterializedView.refresh]]'s `_CURRENT` alternation were
-  * three bespoke commit formats — three crash matrices to test. They now
-  * share this one code path.
+  * promises: the segmented states ([[SegmentedState]]: the ANN index, the
+  * dedup band index, the join-MV history), [[graft.streaming.IncrementalAgg]]
+  * and [[MaterializedView.refresh]] all commit through this one code path,
+  * so there is one crash matrix to test.
   *
   * Layout:
   * {{{
@@ -29,17 +28,15 @@ final case class Manifest(
   * prefers the highest complete history version over the cached
   * pointer): a crash at any point leaves either the old or the new
   * manifest current — never a torn one — and data written for an
-  * uncommitted manifest is an unreachable orphan (vacuumable). Folding
-  * the batch ledger INTO the manifest closes the old crash window
-  * between a `_CURRENT` advance and a separate `_LAST_BATCH` advance:
-  * version, segment list, and ledger move in ONE atomic publish.
+  * uncommitted manifest is an unreachable orphan (vacuumable). Version,
+  * segment list and batch ledger move in ONE atomic publish.
   *
   * Time travel: [[at]] reads any retained history version — replay tests
   * read the state as of an earlier commit. Whether the DATA of an old
-  * version is still on disk is the caller's retention policy
-  * (IncrementalDedup keeps superseded segments until `vacuum`;
-  * IncrementalAgg retains the previous data version alongside the
-  * current one).
+  * version is still on disk is the caller's retention policy: a segmented
+  * state keeps superseded segments until its vacuum, which also prunes the
+  * history versions that referenced them; IncrementalAgg retains the
+  * previous data version alongside the current one.
   *
   * The schema fingerprint makes layout drift loud: a writer whose data
   * schema no longer matches the manifest's recorded fingerprint must
@@ -226,36 +223,18 @@ object StateManifest {
   private val reclaimLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Delete INCOMPLETE history files above the current version — stale
-    * empty claims left by the pre-link commitIf protocol, or externally
-    * torn files. Under the link protocol a commit only ever appears as a
-    * complete file, so nothing this deletes can be (or become) a commit:
-    * a name that exists blocks every `link(2)`, and only this reclaim
-    * removes names (serialized per root — see [[reclaimLocks]]).
-    * Returns the reclaimed version numbers.
-    *
-    * Cross-process serialization comes from an exclusive `flock` on
-    * `root/_RECLAIM.lock`: ingest retry loops call reclaim inline, and a
-    * duplicate scheduler legitimately runs two ingest JVMs — without the
-    * file lock, reclaimer A's stale delete could kill a COMPLETE commit
-    * that reclaimer B's delete + a writer's fresh link placed at the same
-    * version between A's check and A's delete. The JVM-level monitor
-    * still wraps the flock (one acquisition per JVM — overlapping
-    * FileLock requests from one JVM throw rather than block). */
   /** Serialize MAINTENANCE passes (compact/vacuum) per state root, across
     * processes: an exclusive `flock` on `root/_MAINT.lock` wrapped in a
     * per-root JVM monitor (the [[reclaimOrphans]] discipline). Why vacuum
-    * needs it (ADVICE r17): a compaction writes its new segment directory
-    * BEFORE its CAS commit, so a concurrent vacuum — which deletes
-    * anything absent from the current manifest — would rip the
-    * half-written segment out from under the compactor; under one lock
-    * the vacuum runs either before the segment exists or after the CAS
-    * decided its fate. Ingest writers never take this lock: their
-    * in-flight directories are protected by the batch-id guard (an
-    * uncommitted batch's id is always above the manifest ledger, and
-    * vacuum skips those names). Returns None — skipping the maintenance
-    * pass — if the lock is held by a sibling classloader in this JVM
-    * (best-effort maintenance, same as reclaim). */
+    * needs it: a compaction writes its new segment directory BEFORE its
+    * CAS commit, so a concurrent vacuum — which deletes anything absent
+    * from the current manifest — would rip the half-written segment out
+    * from under the compactor; under one lock the vacuum runs either
+    * before the segment exists or after the CAS decided its fate. Append
+    * writers never take this lock; [[SegmentedState]] guards their
+    * in-flight directories. Returns None — skipping the maintenance pass —
+    * if the lock is held by a sibling classloader in this JVM (best-effort
+    * maintenance, same as reclaim). */
   def withMaintenanceLock[T](root: String)(body: => T): Option[T] = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
     val key = "maint:" +
@@ -274,6 +253,22 @@ object StateManifest {
     }
   }
 
+  /** Delete INCOMPLETE history files above the current version — stale
+    * empty claims left by the pre-link commitIf protocol, or externally
+    * torn files. Under the link protocol a commit only ever appears as a
+    * complete file, so nothing this deletes can be (or become) a commit:
+    * a name that exists blocks every `link(2)`, and only this reclaim
+    * removes names (serialized per root — see [[reclaimLocks]]).
+    * Returns the reclaimed version numbers.
+    *
+    * Cross-process serialization comes from an exclusive `flock` on
+    * `root/_RECLAIM.lock`: ingest retry loops call reclaim inline, and a
+    * duplicate scheduler legitimately runs two ingest JVMs — without the
+    * file lock, reclaimer A's stale delete could kill a COMPLETE commit
+    * that reclaimer B's delete + a writer's fresh link placed at the same
+    * version between A's check and A's delete. The JVM-level monitor
+    * still wraps the flock (one acquisition per JVM — overlapping
+    * FileLock requests from one JVM throw rather than block). */
   def reclaimOrphans(root: String): Seq[Long] = {
     // a root with no directory yet has no orphans — match versions()'s
     // tolerance instead of throwing NoSuchFileException from the lock open

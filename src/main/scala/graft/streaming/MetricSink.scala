@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions._
 
 /** ZhiYan-sink semantics (`ZhiYanSink.java:69-115`): the reference buffers
@@ -16,10 +17,13 @@ object MetricSink {
   /** Windowed delay aggregate over the fan-out's delay stream
     * (`delay_ms`, `event_time`). Watermark bounds state — late rows beyond
     * 1 minute are dropped (upgrade: the reference has no event time at all,
-    * `DataStreamProcessingJob.java:119`). */
+    * `DataStreamProcessingJob.java:119`). An input that already carries a
+    * watermark on `event_time` — [[StatefulOps.dedupWithinWatermark]]
+    * output — keeps it: Spark refuses to redefine a watermark, and the one
+    * watermark then bounds both operators' state. */
   def windowedAvg(delays: DataFrame, windowLen: String = "10 seconds"): DataFrame =
-    delays
-      .withWatermark("event_time", "1 minute")
+    (if (delays.schema("event_time").metadata.contains(EventTimeWatermark.delayKey)) delays
+     else delays.withWatermark("event_time", "1 minute"))
       .groupBy(window(col("event_time"), windowLen))
       .agg(
         count(lit(1)).as("n"),

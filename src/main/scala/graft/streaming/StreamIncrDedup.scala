@@ -86,9 +86,8 @@ object StreamIncrDedup {
     // auto-maintenance AFTER the ledger record: this batch's decisions
     // are already materialized, so the (deferred-reap) maybeCompact can
     // never pull a directory out from under them. Size-triggered so a
-    // feed of any length keeps pruned reads O(touched buckets) —
-    // round 19, VERDICT r18 #2: the third lifecycle gets the same
-    // deployed policy as the ANN index and the join-MV history.
+    // feed of any length keeps pruned reads O(touched buckets) — the
+    // policy every segmented state shares (SegmentedState.maybeCompact).
     if (autoCompactAt > 0)
       IncrementalDedup.maybeCompact(spark, root, autoCompactAt)
   }

@@ -1532,4 +1532,160 @@ class MaintenanceSpec extends SparkSpec {
     assert(rows(IncrementalJoinAgg.state(spark, root).get) == all,
       "pinned build side changed the maintained state")
   }
+
+  // ---- crash drill over the one segmented-state lifecycle ----
+
+  /** One segmented-state kind as the crash drill drives it: its append of
+    * batch `i`, its compaction, its vacuum, and what its reader sees. */
+  private case class DrillKind(name: String, append: (String, Long) => Unit,
+      compact: String => Unit, vacuum: String => Unit,
+      visible: String => Set[Seq[Any]])
+
+  private def drillKinds: Seq[DrillKind] = {
+    import graft.api.{AnnIngest, IncrementalDedup, IncrementalJoinAgg, TextDedup, VectorSearch}
+    import org.apache.spark.sql.DataFrame
+    import spark.implicits._
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    val vecs = VectorSearch.withNorm((0 until 16).map(i =>
+        (i.toLong, Seq(math.cos(i.toDouble), math.sin(i.toDouble), 0.5))).toDF("vid", "emb"),
+      col("vid"), col("emb"))
+    val cents = Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 0.0))
+    val docs = (0 until 16).map(i => (i.toLong,
+      (0 until 8).map(t => s"w${(i % 5) * 3 + t}").mkString(" "))).toDF("id", "text")
+    // computed once: each append then reads a local relation
+    val bandsDf = TextDedup.minhashBands(
+      TextDedup.shingleHashes(docs, col("id"), col("text"), n = 3))
+    val bands = spark.createDataFrame(
+      java.util.Arrays.asList(bandsDf.collect(): _*), bandsDf.schema)
+    val a = Seq((1, "F", 10.0), (2, "O", 5.0), (3, "F", 7.0), (4, "O", 2.0),
+      (5, "F", 1.0), (6, "O", 4.0), (7, "F", 3.0), (8, "O", 9.0)).toDF("ak", "st", "x")
+    val b = Seq((1, "AUTO"), (2, "BUILD"), (3, "AUTO"), (4, "HOUSE"), (5, "BUILD"),
+      (6, "AUTO"), (7, "HOUSE"), (8, "AUTO")).toDF("bk", "seg")
+    def joiner(l: DataFrame, r: DataFrame) = l.join(r, l("ak") === r("bk"))
+    def partials(j: DataFrame) = j.groupBy("seg", "st")
+      .agg(sum(col("x").cast("decimal(18,6)")).as("p_sum"), count(lit(1)).as("p_cnt"))
+    def merge(prev: DataFrame, p: DataFrame) = prev.unionByName(p).groupBy("seg", "st")
+      .agg(sum(col("p_sum")).cast("decimal(28,6)").as("p_sum"), sum(col("p_cnt")).as("p_cnt"))
+    Seq(
+      DrillKind("ann",
+        (r, i) => AnnIngest.ingest(spark, r, vecs.where(col("id") % 4 === i), cents, i),
+        r => AnnIngest.compact(spark, r), r => AnnIngest.vacuum(r),
+        r => rows(AnnIngest.readCells(spark, r, Seq(0, 1)).select("id", "cell"))),
+      DrillKind("dedup",
+        (r, i) => IncrementalDedup.ingest(spark, r, bands.where(col("id") % 4 === i)),
+        r => IncrementalDedup.compactIndex(spark, r), r => IncrementalDedup.vacuum(r),
+        r => rows(IncrementalDedup.index(spark, r).get)),
+      DrillKind("join-mv",
+        (r, i) => IncrementalJoinAgg.applyBatch(a.where(col("ak") % 4 === i),
+          b.where(col("bk") % 4 === i), i, r)(joiner, partials, merge),
+        r => IncrementalJoinAgg.compactHistory(spark, r, Seq("ak"), Seq("bk"), buckets = 2),
+        r => IncrementalJoinAgg.vacuumHistory(r),
+        r => rows(IncrementalJoinAgg.state(spark, r).get.select(
+          col("seg"), col("st"), col("p_sum").cast("double"), col("p_cnt")))))
+  }
+
+  /** Relative directory and file paths under `root`. */
+  private def tree(root: String): (Set[String], Set[String]) = {
+    import scala.jdk.CollectionConverters._
+    val r = java.nio.file.Paths.get(root)
+    val walk = java.nio.file.Files.walk(r)
+    try {
+      val (d, f) = walk.iterator().asScala.filter(_ != r).toSeq
+        .partition(java.nio.file.Files.isDirectory(_))
+      (d.map(r.relativize(_).toString).toSet, f.map(r.relativize(_).toString).toSet)
+    } finally walk.close()
+  }
+
+  /** A copy of `pre` holding what a crash at `step` of the operation that
+    * took `pre` to `post` leaves on disk. "dir": the operation's data
+    * directories, no commit. "tmp": plus the next history file still under
+    * its `.tmp` name, never linked. "history": plus the linked history
+    * file, the `_MANIFEST` pointer not refreshed. "partial": a vacuum that
+    * deleted only the first of its orphans. */
+  private def crashed(pre: String, post: String, step: String): String = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val x = Files.createTempDirectory("drill-crash").toString
+    graft.api.ModelCache.copyTree(pre, x)
+    val (preDirs, preFiles) = tree(pre)
+    val (postDirs, postFiles) = tree(post)
+    def put(rel: String, as: String) = {
+      Files.createDirectories(Paths.get(x, as).getParent)
+      Files.copy(Paths.get(post, rel), Paths.get(x, as), StandardCopyOption.REPLACE_EXISTING)
+    }
+    // the operation's data: everything new except the root-level `_` files
+    // (manifest, pointer, locks), which are the commit's
+    def writeData() = {
+      (postDirs -- preDirs).foreach(d => Files.createDirectories(Paths.get(x, d)))
+      (postFiles -- preFiles).filter(_.contains('/')).foreach(f => put(f, f))
+    }
+    lazy val hist = s"_MANIFEST.v${graft.api.StateManifest.current(post).get.version}"
+    step match {
+      case "dir" => writeData()
+      case "tmp" => writeData(); put(hist, s"$hist.${java.util.UUID.randomUUID()}.tmp")
+      case "history" => writeData(); put(hist, hist)
+      case "partial" =>
+        val gone = preDirs -- postDirs
+        val top = gone.filterNot(d => gone.exists(g => d.startsWith(g + "/"))).toSeq.sorted
+        graft.api.AtomicFiles.rmTree(Paths.get(x, top.head))
+    }
+    x
+  }
+
+  test("crash drill: every I/O step of append, compact and vacuum recovers to the crash-free state") {
+    import graft.api.StateManifest
+    // (operation, crash step, whether the operation had committed): one
+    // row per shape a crash leaves on disk
+    val table = Seq(("append", "dir", false), ("append", "tmp", false),
+      ("append", "history", true), ("compact", "dir", false),
+      ("vacuum", "partial", false))
+    def drill(k: DrillKind): Unit = {
+      def copyOf(r: String) = {
+        val c = java.nio.file.Files.createTempDirectory(s"drill-${k.name}").toString
+        graft.api.ModelCache.copyTree(r, c)
+        c
+      }
+      val p = java.nio.file.Files.createTempDirectory(s"drill-${k.name}").toString
+      k.append(p, 0L); k.append(p, 1L)
+      val qa = copyOf(p); k.append(qa, 2L)
+      val qc = copyOf(p); k.compact(qc)
+      val qv = copyOf(qc); k.vacuum(qv)
+      // operation -> (before, after, the operation)
+      val ops: Map[String, (String, String, String => Unit)] = Map(
+        "append" -> ((p, qa, r => k.append(r, 2L))),
+        "compact" -> ((p, qc, k.compact)),
+        "vacuum" -> ((qc, qv, k.vacuum)))
+      // what the pipeline runs after a committed operation
+      def next(r: String): Unit = k.append(r, 3L)
+      // the live list, ledger, retained history, directories and rows
+      def snapshot(r: String) = (StateManifest.current(r).map(m => (m.segments, m.lastBatch)),
+        StateManifest.versions(r), tree(r)._1, k.visible(r))
+      // crash-free: the operation completes, the pipeline goes on, vacuum
+      val clean = table.map { case (op, _, committed) => (op, committed) }.distinct.map {
+        case key @ (op, committed) =>
+          val c = copyOf(ops(op)._2)
+          if (committed) next(c)
+          k.vacuum(c)
+          key -> snapshot(c)
+      }.toMap
+      for ((op, step, committed) <- table) {
+        val (pre, post, run) = ops(op)
+        val x = crashed(pre, post, step)
+        val clue = s"${k.name} crash at $op/$step"
+        // the commit point: readers see the old manifest or the new one
+        assert(StateManifest.current(x) ==
+          StateManifest.current(if (committed) post else pre), clue)
+        // restart: reap the debris, then redo the operation if it had not
+        // committed or go on with the next one if it had, then vacuum
+        k.vacuum(x)
+        if (committed) next(x) else run(x)
+        k.vacuum(x)
+        assert(snapshot(x) == clean((op, committed)), clue)
+      }
+    }
+    // the kinds share nothing but the session: drill them side by side
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Await.result(Future.traverse(drillKinds)(k => Future(drill(k))),
+      scala.concurrent.duration.Duration(5, "min"))
+  }
 }

@@ -99,6 +99,33 @@ class StreamingSpec extends SparkSpec {
     assert(spark.table("dedup").select("payload").as[String].collect().sorted.toSeq == Seq("a", "b"))
   }
 
+  test("windowedAvg consumes dedupWithinWatermark output under the one watermark") {
+    val input = MemoryStream[(java.sql.Timestamp, String, Long)](spark)
+    val msgs = input.toDF().toDF("event_time", "payload", "delay_ms")
+    val agg = MetricSink.windowedAvg(
+      StatefulOps.dedupWithinWatermark(msgs, "1 minute"), "10 seconds")
+    val q = agg.writeStream.outputMode("append")
+      .format("memory").queryName("dedupwinavg").start()
+
+    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000)
+    input.addData((ts(100), "a", 10L), (ts(101), "a", 10L), (ts(105), "b", 20L))
+    q.processAllAvailable()
+    input.addData((ts(500), "c", 30L)) // advances the watermark past 100 s
+    q.processAllAvailable()
+    input.addData((ts(101), "late", 999L)) // late beyond the watermark
+    q.processAllAvailable()
+    input.addData((ts(1000), "d", 1L)) // closes the 500 s window
+    q.processAllAvailable()
+    q.stop()
+
+    val rows = spark.table("dedupwinavg")
+      .select("win_start", "n", "avg_delay_ms").collect()
+      .map(r => (r.getTimestamp(0).getTime / 1000, r.getLong(1), r.getDouble(2)))
+      .toSet
+    // the redelivered "a" counts once; the late row joins no window
+    assert(rows == Set((100L, 2L, 15.0), (500L, 1L, 30.0)), s"got $rows")
+  }
+
   test("stream-stream interval join matches in-window rows, bounded state") {
     val orders = MemoryStream[(java.sql.Timestamp, Long, String)](spark)
     val ships = MemoryStream[(java.sql.Timestamp, Long, String)](spark)
