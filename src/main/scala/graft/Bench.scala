@@ -300,31 +300,6 @@ object Bench {
     }
   }
 
-  /** Session builder with the single-JVM host-quirk tuning applied: the
-    * GraftConfig layered builder (master/partitions/UTC/nanos/UI) plus the
-    * three confs profiled in rounds 10-12 (small page size, non-blocking
-    * ref cleaner, tmpfs scratch) — one place to fix, every bench main
-    * builds from here. */
-  def tunedBuilder(appName: String, cfg: GraftConfig): SparkSession.Builder =
-    cfg.sessionBuilder(appName)
-      // local[32] single-JVM: default page size scales with heap and makes
-      // every sort/agg task zero out ~64MB pages — GC storms (profiled)
-      .config("spark.buffer.pageSize", "2m")
-      // the cleaner's blocking removeBroadcast/removeRDD RPCs serialize
-      // through BlockManagerMaster and stall task-side block ops
-      .config("spark.cleaner.referenceTracking.blocking", "false")
-      // shuffle/broadcast scratch on tmpfs: the sandbox disk has
-      // multi-second write-burst stalls
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/spark-graft"))
-
-  def tunedSession(appName: String): SparkSession = {
-    val s = tunedBuilder(appName, GraftConfig.load(Array.empty,
-      defaults = GraftConfig.Default.copy(parallelism = 32))).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Accumulating task-level shuffle-write counter; the delta around a
     * query is its real shuffle volume ("measure, don't guess"). */
   def addShuffleCounter(spark: SparkSession): () => Long = {
@@ -448,22 +423,7 @@ object Bench {
     val cfg = GraftConfig.load(args,
       defaults = GraftConfig.Default.copy(parallelism = 32))
     val sfDir = cfg.sfDir
-    val spark = cfg.sessionBuilder("graft-bench")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      // local[32] single-JVM: default page size scales with heap and makes
-      // every sort/agg task zero out ~64MB pages — GC storms that tax
-      // random later queries (profiled). Rows here are small; 2m is ample.
-      .config("spark.buffer.pageSize", "2m")
-      // async ref cleanup: the cleaner's blocking removeBroadcast/removeRDD
-      // RPCs serialize through the BlockManagerMaster endpoint and stall
-      // task-side block ops for seconds after GC bursts
-      .config("spark.cleaner.referenceTracking.blocking", "false")
-      // shuffle/broadcast scratch on tmpfs: the sandbox VM's disk has
-      // multi-second write-burst stalls that surface as random query spikes
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/spark-graft"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = TunedSession("graft-bench", cfg)
 
     // warm the session (codegen paths, parquet footer cache, scheduler) so
     // the alphabetically-first query doesn't absorb one-time costs. NB: a

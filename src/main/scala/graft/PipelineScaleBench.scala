@@ -109,7 +109,7 @@ object PipelineScaleBench {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = if (args.length > 1) args(1) else "/tmp/graft-pipe-sf1"
-    val spark = Bench.tunedSession("graft-pipe-sf1")
+    val spark = TunedSession("graft-pipe-sf1")
 
     scaleUp(spark, src, dst)
 

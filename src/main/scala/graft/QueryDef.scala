@@ -25,13 +25,10 @@ object QueryDef {
     QueryDef(name, fn, None)
 }
 
-/** Central persist switch: materialize multi-consumer pipeline stages
-  * unless GRAFT_NO_PERSIST is set (A/B testing cache-lookup overhead). */
+/** Central persist switch: materialize multi-consumer pipeline stages. */
 object Persisting {
-  private val disabled = sys.env.contains("GRAFT_NO_PERSIST")
   def maybe(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (disabled) df
-    else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 }
 
 /** Lineage cap for iterative loops (PageRank, connected components, BPE):

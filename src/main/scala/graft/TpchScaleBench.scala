@@ -74,7 +74,7 @@ object TpchScaleBench {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = if (args.length > 1) args(1) else "/tmp/graft-sf1"
-    val spark = Bench.tunedSession("graft-tpch-sf1")
+    val spark = TunedSession("graft-tpch-sf1")
 
     scaleUp(spark, src, dst)
 

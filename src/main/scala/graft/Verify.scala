@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,26 +8,9 @@ object Verify {
     // optional 3rd arg: comma-separated query names for a focused run
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // nanos-generation events.ts (see Tables.events) — session-build conf
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // same local-mode stall mitigations as Bench (see Bench.scala):
-      // heap-scaled page size causes GC storms; VM disk bursts stall tasks
-      .config("spark.buffer.pageSize", "2m")
-      // async ref cleanup: the cleaner's blocking removeBroadcast/removeRDD
-      // RPCs serialize through the BlockManagerMaster endpoint and stall
-      // task-side block ops for seconds after GC bursts
-      .config("spark.cleaner.referenceTracking.blocking", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/spark-graft"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // parallelism: SPARK_GRAFT_CPUS, else 4 (GraftConfig layering)
+    val spark = TunedSession("graft-verify", GraftConfig.load(Array.empty,
+      defaults = GraftConfig.Default.copy(parallelism = 4)))
     // see Bench.scala: pre-pay the ICU collation <clinit> (30-100s lazy)
     Class.forName("org.apache.spark.sql.catalyst.util.CollationAwareUTF8String")
     new java.io.File(outDir).mkdirs()

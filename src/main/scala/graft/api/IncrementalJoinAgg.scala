@@ -60,7 +60,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[compactHistory]] on the maintenance cadence (e.g. nightly) so the
   * history read stays O(1) directories and the key-clustered `__bkt`
   * layout bounds per-bucket file counts no matter how many batches
-  * preceded (JoinMvBench prices the per-step cost before/after).
+  * preceded (`bench_joinmv_r19.json` records the per-step cost
+  * before/after).
   */
 object IncrementalJoinAgg {
 
@@ -157,9 +158,9 @@ object IncrementalJoinAgg {
     * budget.
     *
     * Why pinning, not stats: left to size estimates the planner builds on
-    * whichever relation is smaller TODAY — measured on the JoinMvBench
-    * shape, that is the HISTORY side (customer history < one orders
-    * delta early in the feed), i.e. the plan re-broadcasts an
+    * whichever relation is smaller TODAY — measured on the
+    * `bench_joinmv_r19.json` shape, that is the HISTORY side (customer
+    * history < one orders delta early in the feed), i.e. the plan re-broadcasts an
     * accumulating relation every step and, once history outgrows the
     * broadcast threshold on BOTH sides, flips to a sort-merge join that
     * SHUFFLES THE ENTIRE HISTORY per step — the exact O(|history|)

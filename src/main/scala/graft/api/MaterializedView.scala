@@ -174,17 +174,9 @@ object MaterializedView extends org.apache.spark.internal.Logging {
     * of the stale version it is replacing. */
   def refresh(spark: SparkSession, definition: DataFrame, dir: String)
       : () => DataFrame = {
-    val root = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.createDirectories(root)
-    // shared StateManifest commit path (round 13) — legacy _CURRENT dirs
-    // decode read-only until their first refresh commits a manifest
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     def current: Option[String] =
-      StateManifest.current(dir).flatMap(_.segments.headOption).orElse {
-        val ptr = root.resolve("_CURRENT")
-        if (java.nio.file.Files.exists(ptr))
-          Some(java.nio.file.Files.readString(ptr).trim).filter(_.nonEmpty)
-        else None
-      }
+      StateManifest.current(dir).flatMap(_.segments.headOption)
     val next = if (current.contains("v0")) "v1" else "v0"
     bypass { definition.write.mode("overwrite").parquet(s"$dir/$next") }
     StateManifest.commit(dir, Seq(next), -1L,

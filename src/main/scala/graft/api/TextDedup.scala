@@ -227,9 +227,7 @@ object TextDedup {
         .withColumn("lbl", col("id")))
     var converged = false
     var it = 0
-    val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
     while (!converged && it < maxIter) {
-      val tRound = System.nanoTime()
       val nbrMin = sym.join(labels, col("dst") === col("id"))
         .groupBy(col("src")).agg(min("lbl").as("nlbl"))
       val stepped = labels.join(nbrMin, col("id") === col("src"), "left")
@@ -254,12 +252,8 @@ object TextDedup {
       converged = next.where(col("lbl") =!= col("prev")).isEmpty
       labels = next.select("id", "lbl")
       it += 1
-      if (ccDebug) System.err.println(
-        s"[cc-debug] round $it took ${(System.nanoTime() - tRound) / 1e9}s")
     }
     sym.unpersist()
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc-debug] converged=$converged rounds=$it jumps=$jumps")
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIter rounds — a duplicate " +
         "cluster has diameter larger than the budget; raise maxIter " +

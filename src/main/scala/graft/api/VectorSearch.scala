@@ -65,22 +65,17 @@ object VectorSearch {
     * carry only the handle, the centroid blocks land once per executor,
     * and assignment stays the SAME zero-exchange codegen'd projection —
     * the gear for models too big to serialize into every plan (hundreds
-    * of MB at 100 TB-scale cell counts). Env-overridable so drills and
-    * specs can force the broadcast gear on small data.
+    * of MB at 100 TB-scale cell counts). Specs exercise the broadcast
+    * gear on small data by calling [[ivfAssignBc]]/[[ivfProbesBc]]
+    * directly.
     *
     * (A third formulation exists for reference: [[ivfAssignJoin]], the
     * fully declarative broadcast centroid-TABLE + grouped-argmax. It is
     * NOT the dispatch target — its `first`/`max_by` aggregate carries
     * array buffers, which Spark can only plan as a SortAggregate, i.e. a
-    * full sort of |corpus| × nCells scored rows; IvfGearBench prices it
-    * against the broadcast-handle gear.) */
-  val IvfRefBudgetBytes: Long =
-    sys.env.get("GRAFT_IVF_REF_BUDGET") match {
-      case None => 16L << 20
-      case Some(s) => s.trim.toLongOption.getOrElse(throw new
-        IllegalArgumentException(
-          s"GRAFT_IVF_REF_BUDGET must be an integer byte count, got '$s'"))
-    }
+    * full sort of |corpus| × nCells scored rows; `bench_ivf_gear_r19.json`
+    * records it against the broadcast-handle gear.) */
+  val IvfRefBudgetBytes: Long = 16L << 20
 
   private def modelBytes(cents: Array[Array[Double]]): Long =
     cents.foldLeft(0L)((a, c) => a + 8L * c.length)
@@ -346,12 +341,12 @@ object VectorSearch {
   }
 
   /** Assignment over a broadcast centroid TABLE — the fully DECLARATIVE
-    * above-budget formulation, kept for reference and priced by
-    * IvfGearBench but no longer the dispatch target: its `first`/`max_by`
-    * aggregate carries array-typed buffers, which Spark plans as a
-    * SortAggregate — a full spilling sort of the |corpus| × nCells scored
-    * rows — where [[ivfAssignBc]] keeps the zero-exchange codegen'd
-    * argmax at any model size. Mechanics:
+    * above-budget formulation, kept for reference (priced in
+    * `bench_ivf_gear_r19.json`) but no longer the dispatch target: its
+    * `first`/`max_by` aggregate carries array-typed buffers, which Spark
+    * plans as a SortAggregate — a full spilling sort of the |corpus| ×
+    * nCells scored rows — where [[ivfAssignBc]] keeps the zero-exchange
+    * codegen'd argmax at any model size. Mechanics:
     * an explicit broadcast-replicate of the model against the corpus
     * (never a corpus-side shuffle for the join), score, then per-row
     * argmax grouped by a per-row SURROGATE key (`monotonically_

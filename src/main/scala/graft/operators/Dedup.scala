@@ -279,19 +279,6 @@ object Dedup {
        |WHERE c.doc_id >= 1000000
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
     val root = java.nio.file.Files.createTempDirectory("graft-incr-dedup").toString
-    // per-phase attribution (the state_profile pattern): stderr timings for
-    // each driver-side phase of the transaction, on by default — the cost
-    // of two nanoTime reads per phase; GRAFT_INCR_DEDUP_PROFILE=0 silences
-    // the print. Added after the r14 hot artifact grew 24% with no plan
-    // change, to keep the phase mix auditable.
-    val prof = !sys.env.get("GRAFT_INCR_DEDUP_PROFILE").contains("0")
-    def phase[T](name: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      if (prof) System.err.println(
-        f"[incr-dedup-profile] $name ${(System.nanoTime() - t0) / 1e9}%.3fs")
-      r
-    }
     // each wave filters the SHARED persisted band stage (sparkBands — the
     // same cache q_dedup_minhash/_ngram/_keep read) instead of re-running
     // the minhash aggregation per wave: a doc's bands are independent of
@@ -316,16 +303,16 @@ object Dedup {
     // it is built once per source fingerprint ([[graft.api.ModelCache]])
     // and tree-copied into this run's fresh root — the run then mutates
     // its own copy (waves + compaction) without touching the cached one.
-    val bootSrc = phase("bootstrap") { graft.api.ModelCache.cached(
+    val bootSrc = graft.api.ModelCache.cached(
       s"incrdedup-boot:${graft.api.ModelCache.fingerprint(d, "documents")}") {
       val dir = java.nio.file.Files.createTempDirectory("graft-incr-boot").toString
       graft.api.IncrementalDedup.ingest(s, dir, bands(col("id") < 1000000L))
       dir
-    } }
-    phase("boot_copy") { graft.api.ModelCache.copyTree(bootSrc, root) }
+    }
+    graft.api.ModelCache.copyTree(bootSrc, root)
     val w1 = col("doc_id") >= 1000000L && col("doc_id") < 2000000L
-    val d1 = full(phase("ingest_w1") { graft.api.IncrementalDedup.ingest(s, root,
-      bands(col("id") >= 1000000L && col("id") < 2000000L)) }, w1)
+    val d1 = full(graft.api.IncrementalDedup.ingest(s, root,
+      bands(col("id") >= 1000000L && col("id") < 2000000L)), w1)
     // compact mid-sequence: the second wave decides against the merged
     // segment — layout maintenance must not change one decision, which
     // this oracle row now gates. No vacuum here: d1 is lazy and still
@@ -335,10 +322,9 @@ object Dedup {
     // so the merged segments are provably duplicate-free and the
     // dropDuplicates exchange would re-shuffle the whole index for
     // nothing (optimization r19; parity spec-pinned in MaintenanceSpec)
-    phase("compact") { graft.api.IncrementalDedup.compactIndex(s, root,
-      dedupRows = false) }
-    val d2 = full(phase("ingest_w2") { graft.api.IncrementalDedup.ingest(s, root,
-      bands(col("id") >= 2000000L)) }, col("doc_id") >= 2000000L)
+    graft.api.IncrementalDedup.compactIndex(s, root, dedupRows = false)
+    val d2 = full(graft.api.IncrementalDedup.ingest(s, root,
+      bands(col("id") >= 2000000L)), col("doc_id") >= 2000000L)
     d1.unionByName(d2).orderBy("doc_id")
   }
 

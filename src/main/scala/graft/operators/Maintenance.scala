@@ -317,8 +317,9 @@ object Maintenance {
     * full refresh from base (r15 served this query from a full-recompute
     * `refresh`). The accumulated history COMPACTS mid-sequence (r17:
     * `compactHistory` + `vacuumHistory` between waves 1 and 2 — O(batches)
-    * delta dirs fold into one key-clustered segment per side; JoinMvBench
-    * prices the tail steps at 6.5× with 24 batches). The rewrite then
+    * delta dirs fold into one key-clustered segment per side;
+    * `bench_joinmv_r19.json` records the tail steps at 6.5× with 24
+    * batches). The rewrite then
     * serves the incrementally-maintained state; the oracle is unchanged
     * because after the last wave the state equals the definition over the
     * full bases (prefix-parity pinned per step in MaintenanceSpec).

@@ -29,19 +29,8 @@ object IncrementalAgg {
   private def stateDir(root: String): java.nio.file.Path =
     java.nio.file.Paths.get(root)
 
-  // round 13: commit through the shared graft.api.StateManifest — the
-  // version pointer and the batch ledger advance in ONE atomic rename
-  // (the old _CURRENT-then-_LAST_BATCH ordering had a crash window
-  // between them). Pre-manifest state dirs decode through the legacy
-  // pointer files read-only.
   private def currentPath(root: String): Option[String] =
     graft.api.StateManifest.current(root).flatMap(_.segments.headOption)
-      .orElse {
-        val p = stateDir(root).resolve("_CURRENT")
-        if (java.nio.file.Files.exists(p))
-          Some(java.nio.file.Files.readString(p).trim).filter(_.nonEmpty)
-        else None
-      }
 
   /** The stored partials for `root`, or None before the first batch. */
   def state(spark: SparkSession, root: String): Option[DataFrame] =
@@ -57,11 +46,7 @@ object IncrementalAgg {
         round(col("s").cast("double") / col("c"), 4).as("avg_v")))
 
   private def lastApplied(root: String): Long =
-    graft.api.StateManifest.current(root).map(_.lastBatch).getOrElse {
-      val p = stateDir(root).resolve("_LAST_BATCH")
-      if (java.nio.file.Files.exists(p)) java.nio.file.Files.readString(p).trim.toLong
-      else -1L
-    }
+    graft.api.StateManifest.current(root).map(_.lastBatch).getOrElse(-1L)
 
   /** Time-travel read: the stored partials as of manifest commit
     * `version`. Valid while that version's data directory is retained —
@@ -107,7 +92,7 @@ object IncrementalAgg {
     // order matters: data first, then ONE manifest commit carrying the
     // version pointer, the batch ledger, and the schema fingerprint — a
     // crash before the commit replays the batch against the OLD manifest
-    // (no partial state is ever visible); there is no longer a window
+    // (no partial state is ever visible); there is no window
     // where the pointer has advanced but the ledger has not.
     val fp = graft.api.StateManifest.schemaFingerprint(merged.schema)
     graft.api.StateManifest.current(root).map(_.schemaFp)

@@ -55,9 +55,9 @@ object StreamJoinAggView {
     * `spec.keyA`/`keyB` — the clustering keys), each trigger ends with
     * [[IncrementalJoinAgg.maybeCompactHistory]], folding either side's
     * history back to ONE key-clustered segment whenever its live segment
-    * count exceeds the threshold — the JoinMvBench-measured O(batches)
-    * per-step blow-up (14.78 s/step by batch 16-23 plain vs 2.26
-    * compacted) can then never accumulate in a deployed feed, no matter
+    * count exceeds the threshold — the O(batches) per-step blow-up
+    * recorded in `bench_joinmv_r19.json` (14.78 s/step by batch 16-23
+    * plain vs 2.26 compacted) can then never accumulate in a deployed feed, no matter
     * how long it runs. 0 preserves the caller-managed cadence. */
   def maintain(tagged: DataFrame, root: String, ckpt: String,
       spec: Spec, autoCompactAt: Int = 0): StreamingQuery = {

@@ -341,4 +341,66 @@ class BrokerSourceSpec extends SparkSpec {
     // one-batch-lag sentinels can still be in flight
     brokers.foreach(b => assert(b.retainedTotal <= 1, s"${b.name} not truncated"))
   }
+
+  test("live publish: the delay metric meters every session message exactly once") {
+    import org.apache.spark.sql.functions.{count, lit, min}
+    val b = MsgBroker.create("live", numPartitions = 2)
+    val metered = new ConcurrentHashMap[Long, (Long, Long)] // batchId-keyed: replays overwrite
+    val q = MsgPipeline.runFanOut(
+      MessageSource.brokerStream(spark, "live"), ckpt("live"), () => System.currentTimeMillis(),
+      (_, _) => (),
+      (df, id) => {
+        val r = df.agg(count(lit(1)), min("delay_ms")).collect()(0)
+        if (r.getLong(0) > 0) metered.put(id, (r.getLong(0), r.getLong(1)))
+      })
+    // paced waves stamped with wall-clock send_ts while the query runs
+    for (w <- 0 until 5) {
+      (0 until 200).foreach(i =>
+        b.publish(mk("session", System.currentTimeMillis(), s"w${w}_$i\n")))
+      b.publish(mk("heartbeat", System.currentTimeMillis(), "hb\n"))
+      Thread.sleep(200)
+    }
+    q.processAllAvailable()
+    q.stop()
+    val batches = metered.values.asScala
+    assert(batches.map(_._1).sum == 1000, "every session message metered once, no loss")
+    assert(batches.forall(_._2 >= 0), "delay is measured after publish, never negative")
+  }
+
+  test("broker fan-in into RocksDB delay windows: every window's final count is exact") {
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(providerKey)
+    graft.streaming.StatefulOps.useRocksDbStateStore(spark)
+    try {
+      val names = Seq("win1", "win2", "win3")
+      val brokers = names.map(n => MsgBroker.create(n, numPartitions = 2))
+      // 1,500 msgs 100 ms apart: 150 s of monotone event time, fifteen 10 s
+      // windows of 100 msgs each, every fifth a heartbeat the route drops
+      val t0 = 1700000000000L
+      for (i <- 0 until 1500)
+        brokers(i % 3).publish(mk(if (i % 5 == 4) "heartbeat" else "session",
+          t0 + i * 100L, s"s$i\n"))
+      val last = new ConcurrentHashMap[Long, Long] // win_start -> latest n
+      val win = graft.streaming.MetricSink.windowedAvg(MsgPipeline.delayStream(
+        MsgPipeline.parse(MessageSource.brokerStream(spark, names.mkString(","),
+          maxPerTrigger = Some(300L))), nowMs = t0 + 150000L))
+      val q = win.writeStream.outputMode("update")
+        .option("checkpointLocation", ckpt("win"))
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          df.select("win_start", "n").collect()
+            .foreach(r => last.put(r.getTimestamp(0).getTime, r.getLong(1)))
+          ()
+        }.start()
+      q.processAllAvailable()
+      val stateRows = stateRowsNow(q)
+      q.stop()
+      assert(last.asScala.toMap == (0 until 15).map(k => (t0 + k * 10000L) -> 80L).toMap,
+        "no window lost a row to the watermark or counted one twice")
+      assert(stateRows < 15, s"windows behind the watermark are evicted ($stateRows rows)")
+      names.foreach(MsgBroker.remove)
+    } finally prev match {
+      case Some(v) => spark.conf.set(providerKey, v)
+      case None => spark.conf.unset(providerKey)
+    }
+  }
 }

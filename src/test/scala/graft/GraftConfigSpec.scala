@@ -75,4 +75,32 @@ class GraftConfigSpec extends AnyFunSuite {
       defaults = GraftConfig.Default.copy(parallelism = 4, batchNum = 100))
     assert(c.parallelism == 4 && c.batchNum == 100)
   }
+
+  test("census: the mains and env knobs src/main defines are exactly these") {
+    // a new entry point or knob must be added here on purpose: the engine
+    // is one job plus its drivers, measured by perfbench, not a probe kit
+    import scala.jdk.CollectionConverters._
+    val sources = Files.walk(java.nio.file.Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).map(Files.readString).toSeq
+    assert(sources.size > 50, "run from the repository root")
+    val mains = sources.flatMap { src =>
+      "def main\\s*\\(".r.findAllMatchIn(src).map { m =>
+        "object\\s+(\\w+)".r.findAllMatchIn(src.take(m.start)).toSeq.last.group(1)
+      }
+    }.toSet
+    assert(mains == Set("Verify", "StreamDemo", "Bench", "TpchScaleBench",
+      "PipelineScaleBench", "PlanPeek"))
+    // every GRAFT-named literal (GraftConfig passes its keys through a
+    // map) plus any literal read straight from the environment
+    val knob = "\"((?:SPARK_)?GRAFT_[A-Z0-9_]+)\"".r
+    val envRead = "(?:sys\\.env[.\\w]*|getenv)\\(\\s*\"([A-Z0-9_]+)\"".r
+    val knobs = sources.flatMap(src =>
+      (knob.findAllMatchIn(src) ++ envRead.findAllMatchIn(src)).map(_.group(1))).toSet
+    assert(knobs == Set(
+      "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CHECKPOINT_DIR",
+      "SPARK_GRAFT_SOURCE_DIR", "SPARK_GRAFT_TRIGGER_MS", "SPARK_LOCAL_DIRS",
+      "GRAFT_MODEL_DIR", "GRAFT_BENCH_ONLY", "GRAFT_BENCH_DEGRADE",
+      "GRAFT_BENCH_NO_TAIL", "GRAFT_BENCH_REF_JSON", "GRAFT_BENCH_JSON",
+      "GRAFT_TPCH_EXPLAIN", "GRAFT_TPCH_SF1_JSON", "GRAFT_PIPE_SF1_JSON"))
+  }
 }
