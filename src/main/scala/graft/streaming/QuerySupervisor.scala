@@ -50,8 +50,11 @@ final class QuerySupervisor private (
       val delay = backoffMs << (restartCount - 1)
       val t = new Thread(() => {
         Thread.sleep(delay)
-        try current = startQuery()
-        catch { case ex: Throwable => lastError = Some(ex.toString); finish() }
+        if (!userStopped)
+          try {
+            current = startQuery()
+            if (userStopped) current.stop() // stop() raced this restart
+          } catch { case ex: Throwable => lastError = Some(ex.toString); finish() }
       }, s"graft-supervisor-restart-$restartCount")
       t.setDaemon(true)
       t.start()
@@ -71,8 +74,12 @@ final class QuerySupervisor private (
     } catch { case ex: Throwable => lastError = Some(ex.toString); finish(); throw ex }
   }
 
-  /** The live run (changes identity across restarts; same query id). */
-  def query: StreamingQuery = current
+  /** The live run (changes identity across restarts; same query id). A
+    * restarted run is registered as active before its start returns, so it
+    * is looked up by id rather than read from `current`, which the restart
+    * thread assigns only after start returns. */
+  def query: StreamingQuery =
+    Option(queryId).flatMap(id => Option(spark.streams.get(id))).getOrElse(current)
 
   /** Restarts consumed so far. */
   def restarts: Int = restartCount
@@ -90,7 +97,11 @@ final class QuerySupervisor private (
   /** Clean shutdown: no restart is attempted for a user-requested stop. */
   def stop(): Unit = {
     userStopped = true
-    val cur = current
+    // the stop's own termination event may reach the listener only after
+    // finish() detached it, so a failure this supervisor healed is cleared
+    // here; a terminal failure (budget exhausted) is kept
+    if (!isTerminal) lastError = None
+    val cur = query
     if (cur != null) cur.stop()
     finish()
   }

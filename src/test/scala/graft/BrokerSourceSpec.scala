@@ -367,7 +367,7 @@ class BrokerSourceSpec extends SparkSpec {
     assert(batches.forall(_._2 >= 0), "delay is measured after publish, never negative")
   }
 
-  test("broker fan-in into RocksDB delay windows: every window's final count is exact") {
+  test("broker fan-in to RocksDB delay windows: each window's final count is exact") {
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(providerKey)
     graft.streaming.StatefulOps.useRocksDbStateStore(spark)

@@ -455,6 +455,44 @@ class StreamingSpec extends SparkSpec {
     assert(sup.isTerminal && sup.failure.isEmpty, "user stop is clean, not a failure")
   }
 
+  test("supervisor: a user stop after a healed failure reads clean while the listener bus lags") {
+    // a slow listener ahead of the supervisor's holds the bus, so the clean
+    // stop's termination event reaches the supervisor only after stop() has
+    // returned and detached it: the healed run's old failure must not linger
+    val lag = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = Thread.sleep(1000)
+    }
+    spark.streams.addListener(lag)
+    try {
+      val input = MemoryStream[String](spark)
+      val ckpt = Files.createTempDirectory("ckpt-supervise-lag").toString
+      val delivered = new ConcurrentLinkedQueue[String]
+      @volatile var failFirst = true
+      val sup = QuerySupervisor.supervise(spark, maxRestarts = 2, backoffMs = 50) { () =>
+        MsgPipeline.runFanOut(
+          input.toDF(), ckpt, () => 2000000L,
+          (ds, _) => {
+            val rows = ds.collect()
+            if (failFirst) { failFirst = false; throw new RuntimeException("http 500") }
+            rows.foreach(delivered.add)
+          },
+          (_, _) => ())
+      }
+      input.addData(mk("session", 1000000L, "payload-lag\n"))
+      val deadline = System.currentTimeMillis() + 30000
+      while (delivered.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      assert(sup.restarts == 1, s"expected exactly one restart, got ${sup.restarts}")
+      assert(sup.query.isActive, "healed query must keep running")
+      sup.stop()
+      assert(sup.isTerminal && sup.failure.isEmpty,
+        s"user stop is clean, not a failure: ${sup.failure}")
+      assert(delivered.asScala.toSeq == Seq("payload-lag\n"))
+    } finally spark.streams.removeListener(lag)
+  }
+
   test("supervisor: restart budget is bounded; exhaustion latches terminal failure") {
     val input = MemoryStream[String](spark)
     val ckpt = Files.createTempDirectory("ckpt-supervise-bound").toString
