@@ -76,9 +76,10 @@ object AnnIndex {
 
   /** Base frame per (session, dir), cached: schema inference + the
     * partition-directory index build once per process instead of per
-    * query. Safe because an index directory is immutable once built — a
-    * data regeneration moves the source fingerprint and lands the rebuilt
-    * index under a NEW directory name (`Similarity.ivfIndexDir`).
+    * query. Safe because an index directory is immutable once committed:
+    * the `Similarity.ivfIndexDir` path is a manifest-committed segment that
+    * nothing rewrites, and a data regeneration moves the source
+    * fingerprint, so the rebuilt index commits under a NEW key.
     * WEAK-keyed by the session itself (reference identity — SparkSession
     * doesn't override equals): a stopped-and-collected session releases
     * its frames, and no identity-hash reuse can ever serve a frame bound

@@ -1,13 +1,13 @@
 package graft.api
 
-/** The single implementation of the write-then-point pointer-file commit
-  * the [[StateManifest]] relies on (its `_MANIFEST` pointer and
-  * single-writer history files): write the new content to a sibling
-  * `.tmp`, then atomically rename over the pointer. Readers see the old or
-  * the new pointer, never a torn one. Centralized because this is
-  * crash-safety-critical code — a future hardening (parent-dir fsync, a
-  * fallback for filesystems without ATOMIC_MOVE) must reach every state
-  * store at once. */
+/** The single implementation of the write-then-rename pointer-file write:
+  * the [[StateManifest]]'s `_MANIFEST` read cache and
+  * [[graft.streaming.StreamIncrDedup]]'s batch ledger. Write the new
+  * content to a sibling `.tmp`, then atomically rename over the pointer.
+  * Readers see the old or the new pointer, never a torn one. Centralized
+  * because this is crash-safety-critical code — a future hardening
+  * (parent-dir fsync, a fallback for filesystems without ATOMIC_MOVE) must
+  * reach every state store at once. */
 object AtomicFiles {
   def writePointer(p: java.nio.file.Path, content: String): Unit = {
     // writer-unique temp: with a FIXED temp name, two racing callers

@@ -43,8 +43,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The manifest's segment list is `viewVersion +: side segments` — one
   * atomic CAS covers the view pointer AND both sides' live history, so
   * a reader never sees a compaction half-applied. The view version sits
-  * outside the lifecycle's tracked list: [[applyBatch]] retires old
-  * versions itself.
+  * outside the lifecycle's tracked list: it is the root's head, and
+  * [[SegmentedState.retire]] retires old versions after each batch.
   *
   * Exactly-once: a replay of an applied `batchId` is a no-op (ledger
   * check), and a replay of a CRASHED batch overwrites its own delta and
@@ -106,50 +106,43 @@ object IncrementalJoinAgg {
   def applyBatch(dA: DataFrame, dB: DataFrame, batchId: Long, root: String)(
       join: (DataFrame, DataFrame) => DataFrame,
       partialsOf: DataFrame => DataFrame,
-      merge: (DataFrame, DataFrame) => DataFrame): Unit =
-      SegmentedState.writing(root) {
-    val base = StateManifest.current(root)
-    if (!base.exists(_.lastBatch >= batchId)) {
-      val spark = dA.sparkSession
-      // accumulators resolve from the manifest BEFORE this batch's
-      // directories land, so a crash-replay sees the same frames
-      val aPrev = accumulated(spark, root, "a")
-      val bPrev = accumulated(spark, root, "b")
-      dA.write.mode("overwrite").parquet(s"$root/a/b$batchId")
-      dB.write.mode("overwrite").parquet(s"$root/b/b$batchId")
-      val deltaJ = deltaRule(spark, root, batchId, aPrev, bPrev, join)
-      val partials = partialsOf(deltaJ)
-      val merged = state(spark, root) match {
-        case Some(prev) => merge(prev, partials)
-        case None => partials
-      }
-      val prevVersion = base.flatMap(_.segments.headOption)
-      val version = s"v$batchId"
-      merged.write.mode("overwrite").parquet(s"$root/$version")
-      // data first — deltas AND view version — then the one atomic commit;
-      // a crash anywhere before it replays the batch against the old
-      // manifest and no partial state is ever visible. The committed list
-      // carries both sides' live history so a reader never needs to trust
-      // a directory listing (crash orphans stay invisible).
-      val published = SegmentedState.publish(root, base, Some(batchId),
-          StateManifest.schemaFingerprint(merged.schema)) { live =>
-        version +: Sides.flatMap { s =>
-          val prev = live.drop(1).filter(_.startsWith(s"$s/"))
-          val mine = s"$s/b$batchId"
-          if (prev.contains(mine)) prev else prev :+ mine
+      merge: (DataFrame, DataFrame) => DataFrame): Unit = {
+    val published = SegmentedState.writing(root) {
+      val base = StateManifest.current(root)
+      !base.exists(_.lastBatch >= batchId) && {
+        val spark = dA.sparkSession
+        // accumulators resolve from the manifest BEFORE this batch's
+        // directories land, so a crash-replay sees the same frames
+        val aPrev = accumulated(spark, root, "a")
+        val bPrev = accumulated(spark, root, "b")
+        dA.write.mode("overwrite").parquet(s"$root/a/b$batchId")
+        dB.write.mode("overwrite").parquet(s"$root/b/b$batchId")
+        val deltaJ = deltaRule(spark, root, batchId, aPrev, bPrev, join)
+        val partials = partialsOf(deltaJ)
+        val merged = state(spark, root) match {
+          case Some(prev) => merge(prev, partials)
+          case None => partials
+        }
+        val version = s"v$batchId"
+        merged.write.mode("overwrite").parquet(s"$root/$version")
+        // data first — deltas AND view version — then the one atomic commit;
+        // a crash anywhere before it replays the batch against the old
+        // manifest and no partial state is ever visible. The committed list
+        // carries both sides' live history so a reader never needs to trust
+        // a directory listing (crash orphans stay invisible).
+        SegmentedState.publish(root, base, Some(batchId),
+            StateManifest.schemaFingerprint(merged.schema)) { live =>
+          version +: Sides.flatMap { s =>
+            val prev = live.drop(1).filter(_.startsWith(s"$s/"))
+            val mine = s"$s/b$batchId"
+            if (prev.contains(mine)) prev else prev :+ mine
+          }
         }
       }
-      if (published) {
-        StateManifest.pruneHistory(root, keep = 2)
-        // GC view versions like IncrementalAgg (current + previous = one
-        // commit of time travel); delta directories are the accumulated
-        // history itself and are retained — they ARE the view's base
-        val retain = Set(version) ++ prevVersion
-        SegmentedState.children(root)
-          .filter(n => n.startsWith("v") && !retain.contains(n))
-          .foreach(v => AtomicFiles.rmTree(java.nio.file.Paths.get(root).resolve(v)))
-      }
     }
+    // delta directories are the accumulated history itself and stay; only
+    // view versions retire
+    if (published) SegmentedState.retire(root)
   }
 
   /** The per-step delta rule `ΔA ⋈ B_acc ∪ A_acc ⋈ ΔB ∪ ΔA ⋈ ΔB`, with

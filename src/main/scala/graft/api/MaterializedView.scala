@@ -163,28 +163,27 @@ object MaterializedView extends org.apache.spark.internal.Logging {
     * definition's exact schema, so the read-back passes MvRewrite's
     * positional name/type gate.
     *
-    * Writes are VERSIONED (v0/v1 alternation through the shared
-    * [[StateManifest]] commit path): a re-refresh while the
-    * view is registered would otherwise overwrite the very directory the
-    * rewritten definition plan is reading ("cannot overwrite a path that
-    * is also being read from"). The returned reader resolves the pointer
-    * per call, so it always serves the latest refresh. The recompute runs
-    * under [[bypass]]: refreshing a view that is currently REGISTERED
-    * must re-aggregate the base table, not get itself rewritten to a scan
-    * of the stale version it is replacing. */
+    * Each refresh writes a directory no earlier refresh used and publishes
+    * it as the root's head ([[SegmentedState.publish]]; a changed schema
+    * under the same `dir` is refused as drift), so a re-refresh while the
+    * view is registered never overwrites what the rewritten definition
+    * plan is reading. [[SegmentedState.retire]] keeps the current and the
+    * previous result. The returned reader resolves the manifest per call,
+    * so it always serves the latest refresh. The recompute runs under
+    * [[bypass]]: refreshing a view that is currently REGISTERED must
+    * re-aggregate the base table, not get itself rewritten to a scan of
+    * the stale version it is replacing. */
   def refresh(spark: SparkSession, definition: DataFrame, dir: String)
       : () => DataFrame = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    def current: Option[String] =
-      StateManifest.current(dir).flatMap(_.segments.headOption)
-    val next = if (current.contains("v0")) "v1" else "v0"
-    bypass { definition.write.mode("overwrite").parquet(s"$dir/$next") }
-    StateManifest.commit(dir, Seq(next), -1L,
-      StateManifest.schemaFingerprint(definition.schema))
-    // O(1) state contract: the data alternates v0/v1, so retain exactly
-    // that much history — without this, a refresh-per-micro-batch loop
-    // leaks one _MANIFEST.vN file per refresh forever
-    StateManifest.pruneHistory(dir, keep = 2)
-    () => spark.read.parquet(s"$dir/${current.getOrElse(next)}")
+    def head = StateManifest.current(dir).flatMap(_.segments.headOption)
+    val base = StateManifest.current(dir)
+    val next = s"v${base.map(_.version + 1).getOrElse(0L)}-${java.util.UUID.randomUUID()}"
+    SegmentedState.writing(dir) {
+      bypass { definition.write.parquet(s"$dir/$next") }
+      SegmentedState.publish(dir, base, None,
+        StateManifest.schemaFingerprint(definition.schema))(_ => Seq(next))
+    }
+    SegmentedState.retire(dir)
+    () => spark.read.parquet(s"$dir/${head.getOrElse(next)}")
   }
 }

@@ -1,6 +1,6 @@
 package graft.api
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 /** Durable, fingerprint-keyed storage for fitted model artifacts (IVF
   * centroids, PQ codebooks) — the disk layer under [[ModelCache]].
@@ -8,12 +8,14 @@ import java.nio.file.{Files, Path, Paths}
   * Why: [[ModelCache]] is JVM-local, so every new process re-fits. A
   * production deployment trains the quantizer once per corpus snapshot and
   * SHIPS the model — queries on any executor/driver load it by fingerprint.
-  * Each key gets its own [[StateManifest]]-versioned root: the model file
-  * is written first, then published with an optimistic `commitIf` — two
-  * processes racing the same first fit resolve to exactly one committed
-  * artifact (the loser loads the winner's, which determinism makes
-  * bit-identical anyway), the same protocol every other versioned state
-  * dir in the engine uses.
+  * Each key gets its own [[StateManifest]]-versioned root ([[buildOnce]]):
+  * the artifact directory is written first, then published with an
+  * optimistic `commitIf` — two processes racing the same first build
+  * resolve to exactly one committed artifact (the loser serves the
+  * winner's, which determinism makes bit-identical anyway). This is the
+  * one writer that stays on raw `commitIf` rather than
+  * [[SegmentedState.publish]]: a conflict here means "serve the winner",
+  * not "re-apply the edit".
   *
   * Serialization is raw IEEE-754 bits (hex) per component — lossless
   * round-trip by construction, so persisted ≡ cached ≡ fresh is exact
@@ -93,44 +95,46 @@ object ModelStore {
     }
   }
 
-  private def modelFile(root: String, key: String, seg: String): Path =
-    Paths.get(root, key, seg, "model.txt")
-
-  /** Load-or-fit-and-commit under `root/key`. `render`/`parse` are the
-    * lossless codec for T; `schemaFp` tags the artifact type so a key
-    * collision across types is loud, not a mis-parse. */
-  private def cachedArtifact[T](root: String, key: String, schemaFp: String,
-      render: T => String, parse: String => Option[T])(fit: => T): T = {
+  /** Load-or-build under `root/key`, the one build-once publish: serve
+    * what `load` reads from the committed segment directory when its tag
+    * `schemaFp` matches (a tag mismatch or a torn/corrupt artifact is a
+    * miss), else `build` into a writer-unique segment directory — nothing
+    * else ever writes it — and commit that with `commitIf` on the version
+    * the miss was read at. The first commit wins: a loser deletes its
+    * directory and serves the winner's. A rebuild after a miss commits as
+    * the next manifest version. */
+  private[graft] def buildOnce[T](root: String, key: String, schemaFp: String)(
+      load: String => Option[T])(build: String => T): T = {
     val dirRoot = s"$root/$key"
-    def load(m: Manifest): Option[T] =
-      m.segments.headOption.filter(_ => m.schemaFp == schemaFp).flatMap { seg =>
-        try parse(Files.readString(modelFile(root, key, seg)))
-        catch { case _: java.io.IOException => None }
-      }
-    StateManifest.current(dirRoot).flatMap(load).getOrElse {
-      val model = fit
-      // Segment name is WRITER-UNIQUE (pid+nonce): two processes racing the
-      // same first fit write disjoint paths, so a published segment is never
-      // concurrently written by the commitIf loser. Belt-and-braces, the
-      // bytes also land via temp file + ATOMIC_MOVE — a reader can never
-      // observe a half-written model.txt even mid-write.
-      val cur = StateManifest.current(dirRoot)
-      val seg = s"fit-v${cur.map(_.version + 1).getOrElse(0L)}-" +
-        s"${ProcessHandle.current.pid}-${java.lang.Long.toHexString(System.nanoTime())}"
-      val f = modelFile(root, key, seg)
-      Files.createDirectories(f.getParent)
-      val tmp = f.resolveSibling("model.txt.tmp")
-      Files.writeString(tmp, render(model))
-      Files.move(tmp, f, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      StateManifest.commitIf(dirRoot, cur.map(_.version), Seq(seg),
-        lastBatch = -1L, schemaFp = schemaFp) match {
-        case Some(_) => model
-        case None => // lost the race — serve the winner's (bit-identical
-          // by determinism; load anyway so every process reads ONE artifact)
-          StateManifest.current(dirRoot).flatMap(load).getOrElse(model)
+    def loaded(m: Manifest): Option[T] =
+      m.segments.headOption.filter(_ => m.schemaFp == schemaFp)
+        .flatMap(seg => load(s"$dirRoot/$seg"))
+    val cur = StateManifest.current(dirRoot)
+    cur.flatMap(loaded).getOrElse {
+      val seg = s"v${cur.map(_.version + 1).getOrElse(0L)}-${java.util.UUID.randomUUID()}"
+      val built = build(s"$dirRoot/$seg")
+      if (StateManifest.commitIf(dirRoot, cur.map(_.version), Seq(seg),
+          lastBatch = -1L, schemaFp = schemaFp).nonEmpty) built
+      else StateManifest.current(dirRoot).flatMap(loaded) match {
+        case Some(winner) => AtomicFiles.rmTree(Paths.get(dirRoot, seg)); winner
+        case None => built
       }
     }
   }
+
+  /** [[buildOnce]] of one `model.txt` per segment. `render`/`parse` are
+    * the lossless codec for T; `schemaFp` tags the artifact type so a key
+    * collision across types is loud, not a mis-parse. */
+  private def cachedArtifact[T](root: String, key: String, schemaFp: String,
+      render: T => String, parse: String => Option[T])(fit: => T): T =
+    buildOnce(root, key, schemaFp)(dir =>
+      try parse(Files.readString(Paths.get(dir, "model.txt")))
+      catch { case _: java.io.IOException => None }) { dir =>
+      val model = fit
+      Files.createDirectories(Paths.get(dir))
+      Files.writeString(Paths.get(dir, "model.txt"), render(model))
+      model
+    }
 
   /** Persistent 2-D model (IVF centroids): disk-or-fit. */
   def matrix(root: String, key: String)(fit: => Array[Array[Double]]): Array[Array[Double]] =

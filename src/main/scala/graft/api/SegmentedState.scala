@@ -19,6 +19,10 @@ package graft.api
   *     lists, and the history versions that referenced them.
   *   - [[maybeCompact]]: size-triggered compaction whose reap is deferred
   *     by one cycle.
+  *   - [[retire]]: retention for a single-version root, whose manifest
+  *     head names its one data version (streaming IncrementalAgg,
+  *     [[MaterializedView.refresh]], the join-MV view): the current and
+  *     the previous version stay, older ones go.
   *
   * A [[Kind]] keeps only what is its own: segment naming, its fold, its
   * readers. Retention follows Delta Lake's model: superseded segments stay
@@ -28,11 +32,12 @@ package graft.api
   * The vacuum in-flight guard is one rule with two halves, because a
   * directory being written and a crash orphan look the same on disk:
   *   - in this JVM, every writer holds the root's append guard from its
-  *     first directory write through its commit ([[writing]]), and vacuum
-  *     holds it exclusively — a claimed-but-uncommitted directory is never
-  *     scanned. This is the only protection for kinds without a batch
-  *     ledger (the dedup index, whose compaction may claim a name above an
-  *     in-flight ingest's);
+  *     first directory write through its commit ([[writing]]), every
+  *     commit runs under it, and vacuum and retire hold it exclusively — a
+  *     claimed-but-uncommitted directory or a live commit's temp file is
+  *     never scanned. This is the only protection for kinds without a
+  *     batch ledger (the dedup index, whose compaction may claim a name
+  *     above an in-flight ingest's);
   *   - across processes, a name whose batch id ([[Kind.batchOf]]) is above
   *     the manifest ledger belongs to a writer that has not committed yet
   *     and is skipped.
@@ -139,14 +144,15 @@ object SegmentedState {
     StateManifest.withMaintenanceLock(root) {
       StateManifest.current(root).flatMap { cur =>
         fold(cur).flatMap { case (segs, out) =>
-          StateManifest.commitIf(root, Some(cur.version), segs,
-            cur.lastBatch, cur.schemaFp).map(_ => out)
+          writing(root)(StateManifest.commitIf(root, Some(cur.version), segs,
+            cur.lastBatch, cur.schemaFp)).map(_ => out)
         }
       }
     }.flatten
 
   /** Delete the segment directories the current manifest no longer lists
-    * — compaction leftovers, aborted CAS folds, crashed writers — except
+    * — compaction leftovers, aborted CAS folds, crashed writers — and the
+    * manifest temp files of crashed commits, except
     * those still in flight (see the class doc), then prune every history
     * version whose segments are no longer all on disk, so time travel to
     * it fails fast instead of at evaluation (a vacuum cut short by a crash
@@ -158,6 +164,7 @@ object SegmentedState {
   def vacuum(kind: Kind, root: String): Seq[String] =
     StateManifest.withMaintenanceLock(root) {
       holding(guard(root).writeLock()) {
+        reapTemps(root)
         val m = StateManifest.current(root)
         val live = m.map(kind.tracked).getOrElse(Nil).toSet
         val ledger = m.map(_.lastBatch).getOrElse(-1L)
@@ -178,6 +185,34 @@ object SegmentedState {
         }
       }
     }.getOrElse(Nil)
+
+  /** `_MANIFEST*.tmp` files: with the append guard held exclusively no
+    * commit in this JVM owns one, and a writer in another process whose
+    * temp goes loses its CAS and retries ([[StateManifest.commitIf]]). */
+  private def reapTemps(root: String): Unit =
+    children(root).filter(n => n.startsWith("_MANIFEST") && n.endsWith(".tmp"))
+      .foreach(n => java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(root).resolve(n)))
+
+  /** Versions a single-version root keeps: the current and the previous
+    * one, which is one commit of time travel. */
+  private val HeadsKept = 2
+
+  /** Retention for a single-version root, run after each commit of a new
+    * head (the manifest's first segment, a `v...` directory): prune the
+    * history to the newest [[HeadsKept]] files, then delete every `v...`
+    * directory none of them names, and the manifest temp debris. Such a
+    * root has one writer process, and in it the append guard, held
+    * exclusively as [[vacuum]] does, keeps an in-flight head out of reach.
+    * Call it outside [[writing]]. */
+  def retire(root: String): Unit = holding(guard(root).writeLock()) {
+    StateManifest.pruneHistory(root, keep = HeadsKept)
+    val heads = StateManifest.versions(root).flatMap(StateManifest.at(root, _))
+      .flatMap(_.segments.headOption).toSet
+    children(root).filter(n => n.startsWith("v") && !heads(n))
+      .foreach(n => AtomicFiles.rmTree(java.nio.file.Paths.get(root).resolve(n)))
+    reapTemps(root)
+  }
 
   /** Size-triggered maintenance: `compact` when the live depth exceeds
     * `maxSegments`. The reap is deferred one cycle — the [[vacuum]] runs

@@ -10,9 +10,11 @@ final case class Manifest(
 /** THE single manifest format for every versioned-parquet state directory
   * in the engine — the credible Delta/Iceberg stand-in SCALE.md §C
   * promises: the segmented states ([[SegmentedState]]: the ANN index, the
-  * dedup band index, the join-MV history), [[graft.streaming.IncrementalAgg]]
-  * and [[MaterializedView.refresh]] all commit through this one code path,
-  * so there is one crash matrix to test.
+  * dedup band index, the join-MV history), the single-version roots
+  * ([[graft.streaming.IncrementalAgg]], [[MaterializedView.refresh]], the
+  * join-MV view head) and the build-once artifacts ([[ModelStore]]: fitted
+  * models, the ANN-cache index) all commit through this one code path,
+  * [[commitIf]], so there is one crash matrix to test.
   *
   * Layout:
   * {{{
@@ -21,22 +23,22 @@ final case class Manifest(
   * }}}
   *
   * Commit protocol: data directories are written FIRST by the caller,
-  * then the COMPLETE history file appears atomically (temp + rename for
-  * the single-writer [[commit]]; temp + exclusive `link(2)` for the
-  * racing-writer [[commitIf]]) and the `_MANIFEST` pointer is refreshed
-  * as a read cache. The history file is the commit point ([[current]]
-  * prefers the highest complete history version over the cached
-  * pointer): a crash at any point leaves either the old or the new
-  * manifest current — never a torn one — and data written for an
-  * uncommitted manifest is an unreachable orphan (vacuumable). Version,
-  * segment list and batch ledger move in ONE atomic publish.
+  * then the COMPLETE history file appears atomically (temp + exclusive
+  * `link(2)`) and the `_MANIFEST` pointer is refreshed as a read cache.
+  * The history file is the commit point ([[current]] prefers the highest
+  * complete history version over the cached pointer): a crash at any
+  * point leaves either the old or the new manifest current — never a torn
+  * one — and data written for an uncommitted manifest is an unreachable
+  * orphan (vacuumable). Version, segment list and batch ledger move in
+  * ONE atomic publish.
   *
   * Time travel: [[at]] reads any retained history version — replay tests
   * read the state as of an earlier commit. Whether the DATA of an old
   * version is still on disk is the caller's retention policy: a segmented
   * state keeps superseded segments until its vacuum, which also prunes the
-  * history versions that referenced them; IncrementalAgg retains the
-  * previous data version alongside the current one.
+  * history versions that referenced them; a single-version root keeps the
+  * previous data version alongside the current one
+  * ([[SegmentedState.retire]]).
   *
   * The schema fingerprint makes layout drift loud: a writer whose data
   * schema no longer matches the manifest's recorded fingerprint must
@@ -107,8 +109,8 @@ object StateManifest {
     * pointer — a committer that crashed between the history link and the
     * pointer refresh is still committed, and a stale pointer write can
     * never regress a newer commit. The scan lists the root directory, so
-    * a read costs O(retained history): O(1) for pruning callers
-    * (IncrementalAgg prunes every commit); for append-only roots it grows
+    * a read costs O(retained history): O(1) for single-version roots
+    * (pruned on every commit); for append-only roots it grows
     * one file per ingest until vacuum/pruneHistory — the vacuum cadence
     * the class doc prescribes is also what bounds read cost. */
   def current(root: String): Option[Manifest] = {
@@ -132,25 +134,6 @@ object StateManifest {
         else None
       }.toSeq.sorted
 
-  /** Commit a new manifest (version = current + 1): immutable history
-    * file first, then the atomic pointer rename. The caller has already
-    * written every data directory in `segments`. SINGLE-WRITER commit:
-    * a crashed prior attempt's orphan history file is silently reclaimed
-    * (overwritten) — use [[commitIf]] when writers can race. */
-  def commit(root: String, segments: Seq[String], lastBatch: Long,
-      schemaFp: String): Manifest = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    val next = Manifest(current(root).map(_.version + 1).getOrElse(0L),
-      segments, lastBatch, schemaFp)
-    // a crashed prior attempt may have left this history file — it was
-    // never pointed at, so overwriting it is reclaiming an orphan. The
-    // history write is ALSO temp+atomic-rename: readers of at() see a
-    // complete file or none (parse treats a torn file as absent anyway).
-    AtomicFiles.writePointer(hist(root, next.version), render(next))
-    AtomicFiles.writePointer(ptr(root), render(next))
-    next
-  }
-
   /** Optimistic (compare-and-swap) commit: succeeds only if the current
     * manifest version still equals `expected` (None = no manifest yet)
     * AND this writer atomically publishes the next history file. Returns
@@ -158,10 +141,10 @@ object StateManifest {
     * decides whether its work is still valid (the Delta/Iceberg
     * optimistic-concurrency shape).
     *
-    * Why it exists: a maintenance commit racing an ingest commit under
-    * plain [[commit]] would last-write-win the pointer and silently DROP
-    * the other writer's segment from the live list. Under commitIf
-    * exactly one of the two wins; the loser observes the conflict.
+    * Why compare-and-swap: a maintenance commit racing an ingest commit
+    * under a last-write-wins commit would silently DROP the other writer's
+    * segment from the live list. Here exactly one of the two wins; the
+    * loser observes the conflict.
     *
     * The commit IS the atomic appearance of the COMPLETE history file:
     * the full content is written to a writer-unique temp, then `link(2)`d
@@ -173,9 +156,13 @@ object StateManifest {
     * claimant could resume after its claim was reclaimed and overwrite
     * the history file AND pointer the reclaiming ingest had since
     * committed, silently dropping the ingested segment). A crash before
-    * the link leaves only an invisible `.tmp`; a crash after the link is
-    * a COMPLETED commit (see [[current]] — the pointer is a cache), so
-    * no version number is ever wedged by a dead writer. */
+    * the link leaves only an invisible `.tmp` (reaped by
+    * [[SegmentedState.vacuum]]/[[SegmentedState.retire]]); a crash after
+    * the link is a COMPLETED commit (see [[current]] — the pointer is a
+    * cache), so no version number is ever wedged by a dead writer. A temp
+    * reaped under a live writer in another process costs it one retry: a
+    * vanished temp at the link is a conflict, and at the pointer refresh
+    * it is skipped. */
   def commitIf(root: String, expected: Option[Long], segments: Seq[String],
       lastBatch: Long, schemaFp: String): Option[Manifest] = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
@@ -191,16 +178,18 @@ object StateManifest {
       case _: java.nio.file.FileAlreadyExistsException =>
         java.nio.file.Files.deleteIfExists(tmp)
         return None
+      case _: java.nio.file.NoSuchFileException => return None
     }
     java.nio.file.Files.deleteIfExists(tmp)
-    AtomicFiles.writePointer(ptr(root), render(next)) // cache refresh only
+    try AtomicFiles.writePointer(ptr(root), render(next)) // cache refresh only
+    catch { case _: java.nio.file.NoSuchFileException => () }
     Some(next)
   }
 
   /** Delete history files older than the newest `keep` (never the
-    * current pointer's own version). Callers with an O(1)-state contract
-    * (IncrementalAgg) prune on every commit; append-only callers prune
-    * at vacuum time for versions whose data is gone anyway. Returns the
+    * current pointer's own version). Single-version roots prune on every
+    * commit ([[SegmentedState.retire]]); append-only callers prune at
+    * vacuum time for versions whose data is gone anyway. Returns the
     * pruned versions. */
   def pruneHistory(root: String, keep: Int): Seq[Long] = {
     val cur = current(root).map(_.version).getOrElse(-1L)
@@ -223,25 +212,19 @@ object StateManifest {
   private val reclaimLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Serialize MAINTENANCE passes (compact/vacuum) per state root, across
-    * processes: an exclusive `flock` on `root/_MAINT.lock` wrapped in a
-    * per-root JVM monitor (the [[reclaimOrphans]] discipline). Why vacuum
-    * needs it: a compaction writes its new segment directory BEFORE its
-    * CAS commit, so a concurrent vacuum — which deletes anything absent
-    * from the current manifest — would rip the half-written segment out
-    * from under the compactor; under one lock the vacuum runs either
-    * before the segment exists or after the CAS decided its fate. Append
-    * writers never take this lock; [[SegmentedState]] guards their
-    * in-flight directories. Returns None — skipping the maintenance pass —
-    * if the lock is held by a sibling classloader in this JVM (best-effort
-    * maintenance, same as reclaim). */
-  def withMaintenanceLock[T](root: String)(body: => T): Option[T] = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    val key = "maint:" +
-      java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString
+  /** Run `body` holding an exclusive `flock` on `root/<name>` wrapped in a
+    * per-root JVM monitor (one acquisition per JVM — overlapping FileLock
+    * requests from one JVM throw rather than block). FileLock scope is
+    * per-JVM while the monitor is per-classloader: a sibling classloader
+    * in this JVM (REPL reload, two Spark apps sharing a JVM) can already
+    * hold the lock, which surfaces as OverlappingFileLockException; the
+    * pass is best-effort maintenance, so it is skipped (None) and the
+    * holder's pass (or the next call) does the work. */
+  private def withRootLock[T](root: String, name: String)(body: => T): Option[T] = {
+    val key = s"$name:" + java.nio.file.Paths.get(root).toAbsolutePath.normalize
     reclaimLocks.computeIfAbsent(key, _ => new Object).synchronized {
       val ch = java.nio.channels.FileChannel.open(
-        java.nio.file.Paths.get(root).resolve("_MAINT.lock"),
+        java.nio.file.Paths.get(root).resolve(name),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.WRITE)
       try {
@@ -251,6 +234,21 @@ object StateManifest {
         try Some(body) finally fl.release()
       } finally ch.close()
     }
+  }
+
+  /** Serialize MAINTENANCE passes (compact/vacuum) per state root, across
+    * processes: an exclusive `flock` on `root/_MAINT.lock`
+    * ([[withRootLock]]). Why vacuum needs it: a compaction writes its new
+    * segment directory BEFORE its CAS commit, so a concurrent vacuum —
+    * which deletes anything absent from the current manifest — would rip
+    * the half-written segment out from under the compactor; under one lock
+    * the vacuum runs either before the segment exists or after the CAS
+    * decided its fate. Append writers never take this lock;
+    * [[SegmentedState]] guards their in-flight directories. Returns None
+    * when the pass is skipped. */
+  def withMaintenanceLock[T](root: String)(body: => T): Option[T] = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
+    withRootLock(root, "_MAINT.lock")(body)
   }
 
   /** Delete INCOMPLETE history files above the current version — stale
@@ -266,37 +264,15 @@ object StateManifest {
     * duplicate scheduler legitimately runs two ingest JVMs — without the
     * file lock, reclaimer A's stale delete could kill a COMPLETE commit
     * that reclaimer B's delete + a writer's fresh link placed at the same
-    * version between A's check and A's delete. The JVM-level monitor
-    * still wraps the flock (one acquisition per JVM — overlapping
-    * FileLock requests from one JVM throw rather than block). */
-  def reclaimOrphans(root: String): Seq[Long] = {
+    * version between A's check and A's delete ([[withRootLock]]). */
+  def reclaimOrphans(root: String): Seq[Long] =
     // a root with no directory yet has no orphans — match versions()'s
     // tolerance instead of throwing NoSuchFileException from the lock open
-    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(root)))
-      return Seq.empty
-    val key = java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString
-    reclaimLocks.computeIfAbsent(key, _ => new Object).synchronized {
-      val ch = java.nio.channels.FileChannel.open(
-        java.nio.file.Paths.get(root).resolve("_RECLAIM.lock"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      try {
-        // FileLock scope is per-JVM while the reclaimLocks monitor is
-        // per-classloader: a sibling classloader in this JVM (REPL reload,
-        // two Spark apps sharing a JVM) can already hold the lock, which
-        // surfaces as OverlappingFileLockException rather than blocking.
-        // Reclaim is best-effort maintenance — skip this pass and let the
-        // holder's reclaim (or the next call) pick the orphans up.
-        val fl = try ch.lock() // exclusive, blocks other processes' reclaims
-          catch { case _: java.nio.channels.OverlappingFileLockException =>
-            return Seq.empty }
-        try {
-          val cur = current(root).map(_.version).getOrElse(-1L)
-          val orphans = versions(root).filter(v => v > cur && at(root, v).isEmpty)
-          orphans.foreach(v => java.nio.file.Files.deleteIfExists(hist(root, v)))
-          orphans
-        } finally fl.release()
-      } finally ch.close()
-    }
-  }
+    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(root))) Seq.empty
+    else withRootLock(root, "_RECLAIM.lock") {
+      val cur = current(root).map(_.version).getOrElse(-1L)
+      val orphans = versions(root).filter(v => v > cur && at(root, v).isEmpty)
+      orphans.foreach(v => java.nio.file.Files.deleteIfExists(hist(root, v)))
+      orphans
+    }.getOrElse(Seq.empty)
 }

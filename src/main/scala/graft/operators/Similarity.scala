@@ -135,88 +135,24 @@ object Similarity {
   /** Build-once cell-partitioned ANN index ([[graft.api.AnnIndex]]):
     * the normed corpus assigned and written Hive-partitioned by IVF cell,
     * keyed by (nCells, embeddings fingerprint) — a regenerated dataset
-    * moves the fingerprint and rebuilds under a new directory, so a stale
-    * layout can never serve a query. First touch prices build+search;
-    * every later run (and every later PROCESS — the marker file outlives
-    * the JVM) prices the pruned search alone, the write-once/read-forever
+    * moves the fingerprint and builds under a new key, so a stale layout
+    * can never serve a query. The index is the committed segment of its
+    * `graft-ann/<key>` root ([[graft.api.ModelStore.buildOnce]]: racing
+    * builders in other processes commit exactly one), and this process
+    * resolves it once ([[graft.api.ModelCache.cached]]). First touch
+    * prices build+search; every later run (and every later process)
+    * prices the pruned search alone, the write-once/read-forever
     * amortization the layout exists for. */
-  private val idxBuilt = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   private[graft] def ivfIndexDir(s: SparkSession, d: String): String = {
-    val nc = ivfNCells(s, d)
-    val stamp = s"ivfidx:$nc:2:n:${embFp(d)}"
-    // collision-resistant name (ADVICE r17): two distinct stamps must
-    // never share a directory, or builders thrash rebuilding over each
-    // other and the per-(session, dir) base-frame cache can serve a
-    // frame for the overwritten layout
-    val dir = s"${sys.props("java.io.tmpdir")}/graft-ann/" +
-      graft.api.ModelCache.sha16(stamp)
-    val target = java.nio.file.Paths.get(dir)
-    val marker = target.resolve("_GRAFT_ANN_INDEX")
-    def built() = java.nio.file.Files.exists(marker) &&
-      java.nio.file.Files.readString(marker) == stamp
-    // Publish-by-rename (ADVICE r17): build into a writer-unique temp
-    // sibling (marker written LAST, inside the temp), then ONE atomic
-    // rename onto the final name. The live directory therefore only ever
-    // appears complete — a slow builder racing a lock-timeout take-over
-    // builder can no longer tear it with a concurrent mode=overwrite
-    // write; whoever loses the rename just discards its temp. The .lock
-    // claim below remains as a WORK-DEDUP gate (one builder per process
-    // fleet in the common case), no longer a correctness guarantee, so
-    // its fixed poll budget is safe: a waiter that times out behind a
-    // merely-slow builder builds redundantly but publishes atomically.
-    def buildAndPublish(): Unit = {
-      val tmp = target.resolveSibling(
-        s"${target.getFileName}.tmp-${java.util.UUID.randomUUID()}")
-      graft.api.AnnIndex.build(normed(s, d), ivfCents(s, d), tmp.toString)
-      java.nio.file.Files.writeString(tmp.resolve("_GRAFT_ANN_INDEX"), stamp)
-      try java.nio.file.Files.move(tmp, target,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileSystemException if built() =>
-          // another builder won the rename with identical content
-          graft.api.AtomicFiles.rmTree(tmp)
-        case _: java.nio.file.FileSystemException =>
-          // the name is occupied by a PRE-rename-protocol orphan (old
-          // crashed in-place build): clear it and retry the rename once.
-          // TOCTOU guards (ADVICE r18): re-check built() immediately
-          // before the rmTree — a take-over racer may have published a
-          // COMPLETE index between our failed move and here, and deleting
-          // it would tear concurrent readers; and if a winner publishes
-          // between our rmTree and the retried move, discard tmp instead
-          // of leaking the FileSystemException into the query.
-          if (built()) graft.api.AtomicFiles.rmTree(tmp)
-          else {
-            graft.api.AtomicFiles.rmTree(target)
-            try java.nio.file.Files.move(tmp, target,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            catch {
-              case _: java.nio.file.FileSystemException if built() =>
-                graft.api.AtomicFiles.rmTree(tmp)
-            }
-          }
-      }
-    }
-    if (!idxBuilt.contains(stamp)) idxBuilt.synchronized {
-      if (!idxBuilt.contains(stamp) && !built()) {
-        val lock = java.nio.file.Paths.get(s"$dir.lock")
-        java.nio.file.Files.createDirectories(lock.getParent)
-        val claimed =
-          try { java.nio.file.Files.createDirectory(lock); true }
-          catch { case _: java.nio.file.FileAlreadyExistsException => false }
-        if (claimed)
-          try { if (!built()) buildAndPublish() }
-          finally java.nio.file.Files.deleteIfExists(lock)
-        else {
-          // another process is building: wait for its atomic publish
-          val deadline = System.nanoTime() + 120L * 1000000000L
-          while (!built() && System.nanoTime() < deadline) Thread.sleep(500)
-          if (!built()) buildAndPublish() // stale/slow builder: take over safely
-        }
-      }
-      idxBuilt.add(stamp)
-    }
-    dir
+    val cents = ivfCents(s, d)
+    // "seg": the index is a manifest-committed segment; the key never
+    // names a directory of the earlier marker-file layout
+    val stamp = s"ivfidx:seg:${ivfNCells(s, d)}:2:n:${embFp(d)}"
+    graft.api.ModelCache.cached(stamp)(graft.api.ModelStore.buildOnce(
+        s"${sys.props("java.io.tmpdir")}/graft-ann", graft.api.ModelCache.sha16(stamp),
+        "ann-index")(dir => Some(dir).filter(new java.io.File(_).isDirectory)) {
+      dir => graft.api.AnnIndex.build(normed(s, d), cents, dir); dir
+    })
   }
 
   private[graft] def pqBooks(s: SparkSession, d: String): graft.api.ProductQuant.Codebooks = {

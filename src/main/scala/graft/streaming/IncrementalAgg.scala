@@ -18,23 +18,18 @@ import org.apache.spark.sql.functions._
   * with the SAME `batchId`, so the merge records the last applied id and
   * skips re-deliveries (the standard idempotent-sink contract; pinned in
   * `StreamingSpec` by applying one batch twice). The swap is
-  * write-new-directory-then-repoint through the shared
-  * [[graft.api.StateManifest]] (version pointer + batch ledger + schema
+  * write-new-directory-then-publish through the shared lifecycle
+  * ([[graft.api.SegmentedState.publish]]: head + batch ledger + schema
   * fingerprint in one atomic commit), giving readers an atomic view
   * without a table format; on a real deployment this slot is filled by
   * Delta/Iceberg `MERGE`.
   */
 object IncrementalAgg {
 
-  private def stateDir(root: String): java.nio.file.Path =
-    java.nio.file.Paths.get(root)
-
-  private def currentPath(root: String): Option[String] =
-    graft.api.StateManifest.current(root).flatMap(_.segments.headOption)
-
   /** The stored partials for `root`, or None before the first batch. */
   def state(spark: SparkSession, root: String): Option[DataFrame] =
-    currentPath(root).map(v => spark.read.parquet(s"$root/$v"))
+    graft.api.StateManifest.current(root).flatMap(_.segments.headOption)
+      .map(v => spark.read.parquet(s"$root/$v"))
 
   /** Read-time view: finals derived from the stored partials. */
   def view(spark: SparkSession, root: String): Option[DataFrame] =
@@ -45,17 +40,15 @@ object IncrementalAgg {
         col("c").as("cnt"),
         round(col("s").cast("double") / col("c"), 4).as("avg_v")))
 
-  private def lastApplied(root: String): Long =
-    graft.api.StateManifest.current(root).map(_.lastBatch).getOrElse(-1L)
-
   /** Time-travel read: the stored partials as of manifest commit
     * `version`. Valid while that version's data directory is retained —
-    * the GC keeps the current AND the previous data version, so replay
-    * tests can always read one commit back. */
+    * [[graft.api.SegmentedState.retire]] keeps the current AND the
+    * previous data version, so replay tests can always read one commit
+    * back. */
   def stateAt(spark: SparkSession, root: String, version: Long): Option[DataFrame] =
     graft.api.StateManifest.at(root, version)
       .flatMap(_.segments.headOption)
-      .filter(v => java.nio.file.Files.isDirectory(stateDir(root).resolve(v)))
+      .filter(v => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(root, v)))
       .map(v => spark.read.parquet(s"$root/$v"))
 
   /** Merge one micro-batch (idempotent on `batchId`): partials(batch) ⊎
@@ -72,45 +65,32 @@ object IncrementalAgg {
 
   /** The reusable versioned-merge protocol behind [[applyBatch]]: any
     * associative partial shape (sums/counts, histogram bins, …) gets the
-    * same batchId-idempotent ledger, write-new-then-repoint atomic swap,
-    * and O(1)-version GC. `partialsOf` reduces one micro-batch to its
-    * partials; `merge` folds them into the stored state. */
+    * same batchId-idempotent ledger, write-new-then-publish atomic swap,
+    * and O(1)-version retention. `partialsOf` reduces one micro-batch to
+    * its partials; `merge` folds them into the stored state. */
   private[graft] def applyVersioned(batch: DataFrame, batchId: Long, root: String)
       (partialsOf: DataFrame => DataFrame,
        merge: (DataFrame, DataFrame) => DataFrame): Unit = {
-    java.nio.file.Files.createDirectories(stateDir(root))
-    if (batchId <= lastApplied(root)) return // replay of an applied batch
-    val spark = batch.sparkSession
+    import graft.api.{SegmentedState, StateManifest}
+    val base = StateManifest.current(root)
+    if (base.exists(_.lastBatch >= batchId)) return // replay of an applied batch
     val partials = partialsOf(batch)
-    val merged = state(spark, root) match {
+    val merged = state(batch.sparkSession, root) match {
       case Some(prev) => merge(prev, partials)
       case None => partials
     }
-    val prevVersion = currentPath(root)
     val version = s"v$batchId"
-    merged.write.mode("overwrite").parquet(s"$root/$version")
-    // order matters: data first, then ONE manifest commit carrying the
-    // version pointer, the batch ledger, and the schema fingerprint — a
-    // crash before the commit replays the batch against the OLD manifest
-    // (no partial state is ever visible); there is no window
-    // where the pointer has advanced but the ledger has not.
-    val fp = graft.api.StateManifest.schemaFingerprint(merged.schema)
-    graft.api.StateManifest.current(root).map(_.schemaFp)
-      .filter(f => f.nonEmpty && f != fp).foreach { f =>
-        throw new IllegalStateException(
-          s"state schema drift at $root: manifest=$f batch=$fp")
-      }
-    graft.api.StateManifest.commit(root, Seq(version), batchId, fp)
-    // GC: keep the CURRENT and PREVIOUS data versions (one commit of
-    // time travel for replay tests), delete older ones, and prune the
-    // manifest history to the SAME two-version window — a wider manifest
-    // window would retain history files whose data dirs are already gone
-    // (stateAt answers None for them anyway, misleading versions() readers)
-    graft.api.StateManifest.pruneHistory(root, keep = 2)
-    val retain = Set(version) ++ prevVersion
-    Option(stateDir(root).toFile.list()).getOrElse(Array.empty[String])
-      .filter(n => n.startsWith("v") && !retain.contains(n))
-      .foreach(v => graft.api.AtomicFiles.rmTree(stateDir(root).resolve(v)))
+    // order matters: data first, then ONE commit carrying the head, the
+    // batch ledger and the schema fingerprint — a crash before the commit
+    // replays the batch against the OLD manifest (no partial state is ever
+    // visible); there is no window where the head has advanced but the
+    // ledger has not.
+    val published = SegmentedState.writing(root) {
+      merged.write.mode("overwrite").parquet(s"$root/$version")
+      SegmentedState.publish(root, base, Some(batchId),
+        StateManifest.schemaFingerprint(merged.schema))(_ => Seq(version))
+    }
+    if (published) SegmentedState.retire(root)
   }
 
   /** Wire a streaming DataFrame into the maintained aggregate. */

@@ -103,4 +103,18 @@ class GraftConfigSpec extends AnyFunSuite {
       "GRAFT_BENCH_NO_TAIL", "GRAFT_BENCH_REF_JSON", "GRAFT_BENCH_JSON",
       "GRAFT_TPCH_EXPLAIN", "GRAFT_TPCH_SF1_JSON", "GRAFT_PIPE_SF1_JSON"))
   }
+
+  test("census: commitIf only in SegmentedState and ModelStore, ATOMIC_MOVE only in AtomicFiles") {
+    // one publish path: every state root commits through SegmentedState
+    // (or ModelStore's build-once artifacts) and every atomic rename is
+    // AtomicFiles' pointer write
+    import scala.jdk.CollectionConverters._
+    val sources = Files.walk(java.nio.file.Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> Files.readString(p)).toSeq
+    assert(sources.size > 50, "run from the repository root")
+    def homes(token: String) = sources.collect { case (n, src) if src.contains(token) => n }.toSet
+    assert(homes("StateManifest.commitIf(") == Set("SegmentedState.scala", "ModelStore.scala"))
+    assert(homes("ATOMIC_MOVE") == Set("AtomicFiles.scala"))
+  }
 }

@@ -1680,6 +1680,8 @@ class MaintenanceSpec extends SparkSpec {
         if (committed) next(x) else run(x)
         k.vacuum(x)
         assert(snapshot(x) == clean((op, committed)), clue)
+        assert(!tree(x)._2.exists(f => f.startsWith("_MANIFEST") && f.endsWith(".tmp")),
+          s"$clue: a manifest temp file survived the restart")
       }
     }
     // the kinds share nothing but the session: drill them side by side

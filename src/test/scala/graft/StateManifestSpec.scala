@@ -4,9 +4,10 @@ import graft.api.{Manifest, StateManifest}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The single manifest format behind every versioned state directory
-  * (IncrementalDedup segments, IncrementalAgg versions, MaterializedView
-  * refresh): commit monotonicity, history retention, round-trip fidelity,
-  * and the crash shape (history file without pointer = invisible). */
+  * (segmented states, single-version roots, ModelStore artifacts) and its
+  * one commit, `commitIf`: commit monotonicity, history retention,
+  * round-trip fidelity, and the crash shapes (a torn history file is
+  * absent, a complete one above the pointer is current). */
 class StateManifestSpec extends AnyFunSuite {
 
   private def tmp() =
@@ -15,8 +16,8 @@ class StateManifestSpec extends AnyFunSuite {
   test("commits are monotone; current and history round-trip exactly") {
     val root = tmp()
     assert(StateManifest.current(root).isEmpty)
-    val m0 = StateManifest.commit(root, Seq("seg00000"), -1L, "abc")
-    val m1 = StateManifest.commit(root, Seq("seg00000", "seg00001"), 7L, "abc")
+    val m0 = StateManifest.commitIf(root, None, Seq("seg00000"), -1L, "abc").get
+    val m1 = StateManifest.commitIf(root, Some(0L), Seq("seg00000", "seg00001"), 7L, "abc").get
     assert(m0.version == 0L && m1.version == 1L)
     assert(StateManifest.current(root).contains(m1))
     assert(StateManifest.at(root, 0L).contains(m0))
@@ -27,7 +28,7 @@ class StateManifestSpec extends AnyFunSuite {
 
   test("empty segment list and empty fingerprint round-trip") {
     val root = tmp()
-    val m = StateManifest.commit(root, Seq.empty, -1L, "")
+    val m = StateManifest.commitIf(root, None, Seq.empty, -1L, "").get
     assert(StateManifest.current(root).contains(
       Manifest(0L, Seq.empty, -1L, "")))
     assert(m.segments.isEmpty)
@@ -35,7 +36,7 @@ class StateManifestSpec extends AnyFunSuite {
 
   test("externally corrupted numeric fields read as ABSENT, never a reader crash") {
     val root = tmp()
-    StateManifest.commit(root, Seq("a"), 1L, "fp")
+    StateManifest.commitIf(root, None, Seq("a"), 1L, "fp")
     // corruption shapes a torn external write can leave: truncated-digit
     // version, non-numeric version, malformed lastBatch — each must parse
     // as "no manifest here" so current()/at()/reclaimOrphans keep working
@@ -54,25 +55,9 @@ class StateManifestSpec extends AnyFunSuite {
       .map(_.version).contains(1L))
   }
 
-  test("a crashed commit (history file, no pointer) is invisible and reclaimed") {
-    val root = tmp()
-    StateManifest.commit(root, Seq("a"), 1L, "fp")
-    // simulate: next commit wrote its history file then crashed before the
-    // pointer rename — current stays at version 0, version 1 is orphaned
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(root, "_MANIFEST.v1"),
-      "version=1\nlastBatch=2\nschemaFp=fp\nseg=b\n")
-    assert(StateManifest.current(root).map(_.version).contains(0L),
-      "crashed history file must not become current")
-    // the NEXT real commit takes version 1, overwriting the orphan
-    val m = StateManifest.commit(root, Seq("a", "c"), 3L, "fp")
-    assert(m.version == 1L)
-    assert(StateManifest.at(root, 1L).map(_.segments).contains(Seq("a", "c")))
-  }
-
   test("commitIf: of N racing writers on one expected version, exactly one wins") {
     val root = tmp()
-    StateManifest.commit(root, Seq("base"), -1L, "fp")
+    StateManifest.commitIf(root, None, Seq("base"), -1L, "fp")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
       val results = (0 until 8).map { i =>
@@ -94,7 +79,7 @@ class StateManifestSpec extends AnyFunSuite {
     // ingest commits version 1 meanwhile — maintenance's stale commit
     // must FAIL, so the ingest's segment is never dropped from the list
     val root = tmp()
-    StateManifest.commit(root, Seq("seg0", "seg1"), -1L, "fp") // v0
+    StateManifest.commitIf(root, None, Seq("seg0", "seg1"), -1L, "fp") // v0
     val maintExpected = StateManifest.current(root).map(_.version)
     // a racing ingest advances the manifest
     assert(StateManifest.commitIf(root, maintExpected,
@@ -114,7 +99,7 @@ class StateManifestSpec extends AnyFunSuite {
 
   test("reclaimOrphans restores progress after a crashed CAS claim") {
     val root = tmp()
-    StateManifest.commit(root, Seq("a"), -1L, "fp") // v0
+    StateManifest.commitIf(root, None, Seq("a"), -1L, "fp") // v0
     // crashed claimant: history file for v1 exists, pointer still at v0
     java.nio.file.Files.createFile(java.nio.file.Paths.get(root, "_MANIFEST.v1"))
     assert(StateManifest.commitIf(root, Some(0L), Seq("a", "b"), -1L, "fp").isEmpty,
@@ -130,7 +115,7 @@ class StateManifestSpec extends AnyFunSuite {
     // not rolled back — otherwise a later plain commit would reuse the
     // version number and two different manifests would share it
     val root = tmp()
-    StateManifest.commit(root, Seq("a"), 1L, "fp") // v0, pointer at v0
+    StateManifest.commitIf(root, None, Seq("a"), 1L, "fp") // v0, pointer at v0
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(root, "_MANIFEST.v1"),
       "version=1\nlastBatch=2\nschemaFp=fp\nseg=a\nseg=b\neof=1\n")
@@ -148,7 +133,7 @@ class StateManifestSpec extends AnyFunSuite {
 
   test("a commitIf loser can never clobber the winner's history or pointer") {
     val root = tmp()
-    StateManifest.commit(root, Seq("base"), -1L, "fp") // v0
+    StateManifest.commitIf(root, None, Seq("base"), -1L, "fp") // v0
     val winner = StateManifest.commitIf(root, Some(0L),
       Seq("base", "ingested"), -1L, "fp")
     assert(winner.isDefined)
@@ -167,6 +152,41 @@ class StateManifestSpec extends AnyFunSuite {
       "loser's temp must be cleaned up")
   }
 
+  test("buildOnce: 8 racing directory builders commit one segment, all serve it, losers' dirs go") {
+    import graft.api.ModelStore
+    import java.nio.file.{Files, Paths}
+    val root = tmp()
+    val n = 8
+    val building = new java.util.concurrent.CountDownLatch(n)
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    try {
+      val paths = (0 until n).map { i =>
+        pool.submit(new java.util.concurrent.Callable[String] {
+          def call(): String = ModelStore.buildOnce(root, "idx", "dir")(
+              d => Some(d).filter(p => Files.isDirectory(Paths.get(p)))) { d =>
+            builds.incrementAndGet()
+            // no commit lands before every thread has missed and is building
+            building.countDown()
+            building.await(10, java.util.concurrent.TimeUnit.SECONDS)
+            Files.createDirectories(Paths.get(d, "cell=0"))
+            Files.writeString(Paths.get(d, "cell=0", "part-0"), s"builder $i")
+            d
+          }
+        })
+      }.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(builds.get == n, "every thread must have raced the build")
+      val cur = StateManifest.current(s"$root/idx").get
+      assert(StateManifest.versions(s"$root/idx") == Seq(0L) && cur.segments.size == 1,
+        s"exactly one segment must commit: $cur")
+      assert(paths.distinct == Seq(s"$root/idx/${cur.segments.head}"),
+        s"every caller must get the committed path: ${paths.distinct}")
+      val dirs = Option(new java.io.File(s"$root/idx").listFiles()).toSeq.flatten
+        .filter(_.isDirectory).map(_.getName)
+      assert(dirs == cur.segments, s"losers' directories must be gone: $dirs")
+    } finally pool.shutdown()
+  }
+
   test("sustained contention fuzz: linear gap-free history under racing " +
       "writers, concurrent prune/reclaim, and injected torn files") {
     // The single-shot races above pin one interleaving each; this drives
@@ -179,7 +199,7 @@ class StateManifestSpec extends AnyFunSuite {
     // many-ingests-plus-compactor-plus-crashed-peer shape a 100 TB state
     // directory lives under continuously.
     val root = tmp()
-    StateManifest.commit(root, Seq("base"), -1L, "fp") // v0
+    StateManifest.commitIf(root, None, Seq("base"), -1L, "fp") // v0
     val writers = 8; val commitsPer = 25
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(writers + 2)
