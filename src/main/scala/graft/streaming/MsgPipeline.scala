@@ -11,10 +11,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Reference parity notes:
   *   - side outputs (`OutputTag`, `DataStreamProcessingJob.java:38-66`) are
-  *     reproduced as one `foreachBatch` that `persist()`s the micro-batch
-  *     and derives both outputs from a single source pass — the reference's
-  *     one-pass guarantee, which two independent streaming queries would NOT
-  *     give (they would re-read the source);
+  *     reproduced as one `foreachBatch` that caches one narrow frame per
+  *     micro-batch (the parsed session rows, without the raw `value`) and
+  *     feeds both outputs from it — the reference's one-pass guarantee,
+  *     which two independent streaming queries would NOT give (they would
+  *     re-read the source);
   *   - the checkpoint-coupled ack protocol (`PulsarSource.java:79-118`) maps
   *     to the offset/commit WAL under `checkpointLocation` — no custom code;
   *   - delivery: at-least-once into sinks with an idempotence hook
@@ -54,8 +55,16 @@ object MsgPipeline {
     parsed.join(broadcast(dim), joinCols, "left_outer")
 
   /** Single-pass streaming fan-out: one source read per micro-batch, both
-    * sinks fed from the persisted batch, batchId passed through for sink
-    * idempotence. */
+    * sinks fed from one cached frame, batchId passed through for sink
+    * idempotence.
+    *
+    * The cached frame holds only what the two outputs read — the session
+    * rows' `module`, `send_ts` and `tail` — and is coalesced to the
+    * session's task slots, so each sink job runs one wave of tasks however
+    * many source partitions the batch spans (a task per partition would
+    * queue 12 blocking POSTs on 4 slots for 3 topics × 4 partitions).
+    * Coalescing concatenates whole source partitions, so record order
+    * within a partition is kept. */
   def runFanOut(
       msgs: DataFrame,
       checkpointDir: String,
@@ -65,15 +74,17 @@ object MsgPipeline {
     msgs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
+        val spark = batch.sparkSession
+        val sessions = parse(batch)
+          .where(MsgCodec.isSession(col("module")))
+          .select("module", "send_ts", "tail")
+          .coalesce(spark.sparkContext.defaultParallelism)
+          .persist()
         try {
-          val parsed = parse(batch).persist()
-          try {
-            import batch.sparkSession.implicits._
-            sessionSink(sessionStream(parsed).as[String], batchId)
-            metricSink(delayStream(parsed, nowMs()), batchId)
-          } finally parsed.unpersist()
-        } finally batch.unpersist()
+          import spark.implicits._
+          sessionSink(sessionStream(sessions).as[String], batchId)
+          metricSink(delayStream(sessions, nowMs()), batchId)
+        } finally sessions.unpersist()
         ()
       }
       .start()

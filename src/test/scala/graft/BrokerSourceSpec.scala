@@ -1,9 +1,10 @@
 package graft
 
 import graft.sources.{MessageSource, MsgBroker, MsgOffset}
-import graft.streaming.MsgPipeline
+import graft.streaming.{BatchedSink, MsgPipeline, Transport}
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 /** The DSv2 `graft-msgs` connector (reference R1, `PulsarSource.java`):
@@ -342,6 +343,42 @@ class BrokerSourceSpec extends SparkSpec {
     brokers.foreach(b => assert(b.retainedTotal <= 1, s"${b.name} not truncated"))
   }
 
+  test("fan-out over 3 topics x 4 partitions: one wave of sink tasks per batch, each record once") {
+    val names = Seq("slot1", "slot2", "slot3")
+    val brokers = names.map(n => MsgBroker.create(n, numPartitions = 4))
+    def wire(ti: Int, i: Int): String =
+      mk(if (i % 5 == 4) "heartbeat" else "session", 1000000L + i, s"s${ti}_$i\n")
+    for ((b, ti) <- brokers.zipWithIndex; i <- 0 until 400) b.publishTo(i % 4, wire(ti, i))
+    val sessions = for (ti <- 0 until 3; i <- 0 until 400 if i % 5 != 4) yield s"s${ti}_$i\n"
+
+    val batchNum = 50
+    val sink = new BatchedSink(() => new CountingTransport, batchNum, batchTimeSec = 3600)
+    val transportsPerBatch = new ConcurrentHashMap[Long, Long]
+    CountingTransport.reset()
+    // a cap of 600 of the 1,200 msgs spreads every batch over all 12 partitions
+    val q = MsgPipeline.runFanOut(
+      MessageSource.brokerStream(spark, names.mkString(","), maxPerTrigger = Some(600L)),
+      ckpt("slots"), () => 2000000L,
+      (ds, id) => {
+        val before = CountingTransport.created.get
+        sink.write(ds, id)
+        transportsPerBatch.put(id, CountingTransport.created.get - before)
+      },
+      (_, _) => ())
+    q.processAllAvailable()
+    q.stop()
+    names.foreach(MsgBroker.remove)
+
+    val slots = spark.sparkContext.defaultParallelism
+    val perBatch = transportsPerBatch.asScala.toMap
+    assert(perBatch.size >= 2, s"the cap splits the backlog: $perBatch")
+    assert(perBatch.values.forall(_ <= slots), s"transports per batch, $slots slots: $perBatch")
+    val posts = CountingTransport.posts.asScala.toSeq
+    assert(posts.flatMap(_.linesIterator.map(_ + "\n")).sorted == sessions.sorted,
+      "every session record arrives exactly once")
+    assert(posts.forall(_.linesIterator.size <= batchNum), "no POST exceeds batchNum records")
+  }
+
   test("live publish: the delay metric meters every session message exactly once") {
     import org.apache.spark.sql.functions.{count, lit, min}
     val b = MsgBroker.create("live", numPartitions = 2)
@@ -403,4 +440,18 @@ class BrokerSourceSpec extends SparkSpec {
       case None => spark.conf.unset(providerKey)
     }
   }
+}
+
+/** The one-wave case's transport: counts instances and keeps payloads in
+  * static state, so every copy that a task deserializes reports to one
+  * place. */
+private final class CountingTransport extends Transport {
+  CountingTransport.created.incrementAndGet()
+  override def send(payload: String): Unit = CountingTransport.posts.add(payload)
+}
+
+private object CountingTransport {
+  val created = new AtomicLong
+  val posts = new ConcurrentLinkedQueue[String]
+  def reset(): Unit = { created.set(0L); posts.clear() }
 }

@@ -58,6 +58,32 @@ class StreamingSpec extends SparkSpec {
     assert(metricBatches.asScala.map(_._2).sum == 3)
   }
 
+  test("fan-out: each source row is evaluated exactly once per batch") {
+    val input = MemoryStream[String](spark)
+    val evals = spark.sparkContext.longAccumulator("fanout-source-evals")
+    // a non-deterministic source column: Spark may neither fold nor
+    // duplicate it, so each evaluation is one more read of the source row
+    val counted = udf((v: String) => { evals.add(1L); v }).asNondeterministic()
+    val sessionRows = new java.util.concurrent.atomic.AtomicLong
+    val delayRows = new java.util.concurrent.atomic.AtomicLong
+    val q = MsgPipeline.runFanOut(
+      input.toDF().select(counted(col("value")).as("value")),
+      Files.createTempDirectory("ckpt-onepass").toString, () => 2000000L,
+      (ds, _) => sessionRows.addAndGet(ds.collect().length.toLong),
+      (df, _) => delayRows.addAndGet(df.count()))
+
+    val wave1 = (1 to 40).map(i =>
+      mk(if (i % 4 == 0) "heartbeat" else "session", 1000000L + i, s"t$i\n")) :+ "short"
+    input.addData(wave1: _*)
+    q.processAllAvailable()
+    assert(evals.value == wave1.size, s"batch 1: ${wave1.size} rows, ${evals.value} evaluations")
+    input.addData((41 to 60).map(i => mk("session", 1000000L + i, s"t$i\n")): _*)
+    q.processAllAvailable()
+    q.stop()
+    assert(evals.value == wave1.size + 20, s"batches 1-2: ${wave1.size + 20} rows, ${evals.value} evaluations")
+    assert(sessionRows.get == 50 && delayRows.get == 50, "both sinks consumed every session row")
+  }
+
   test("windowed avg delay with watermark drops late rows") {
     val input = MemoryStream[(java.sql.Timestamp, Long)](spark)
     val delays = input.toDF().toDF("event_time", "delay_ms")
