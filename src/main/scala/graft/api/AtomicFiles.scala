@@ -1,9 +1,10 @@
 package graft.api
 
-/** The single implementation of the write-then-rename pointer-file write:
-  * the [[StateManifest]]'s `_MANIFEST` read cache and
-  * [[graft.streaming.StreamIncrDedup]]'s batch ledger. Write the new
-  * content to a sibling `.tmp`, then atomically rename over the pointer.
+/** The single implementation of the write-then-rename pointer-file write,
+  * whose one caller is the [[StateManifest]]'s `_MANIFEST` read cache (a
+  * state root's batch ledger lives in its manifest, not in a file of its
+  * own). Write the new content to a sibling `.tmp`, then atomically rename
+  * over the pointer.
   * Readers see the old or the new pointer, never a torn one. Centralized
   * because this is crash-safety-critical code — a future hardening
   * (parent-dir fsync, a fallback for filesystems without ATOMIC_MOVE) must

@@ -26,30 +26,19 @@ object BucketCap {
 
   /** Census of oversized buckets: one row per `keys` value with more than
     * `maxBucket` members (`n_members`). Run `.collect()`/`.show()` on this
-    * to audit what [[cap]] will drop.
-    *
-    * `distinctOn`: count distinct values of that column instead of rows.
-    * For band frames the two are identical by construction (one row per
-    * (id, band)); pass it when the input may carry exact duplicate rows —
-    * the incremental-dedup index after a crash-window double-append
-    * ([[graft.streaming.StreamIncrDedup]]) — so inflated row counts cannot
-    * push a bucket over the cap early. Costs a distinct aggregation where
-    * the plain census is a map-side count; default stays count(*). */
-  def oversized(df: DataFrame, keys: Seq[String], maxBucket: Int,
-      distinctOn: Option[String] = None): DataFrame =
+    * to audit what [[cap]] will drop. */
+  def oversized(df: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame =
     df.groupBy(keys.map(col): _*)
-      .agg(distinctOn.map(c => count_distinct(col(c)))
-        .getOrElse(count(lit(1))).as("n_members"))
+      .agg(count(lit(1)).as("n_members"))
       .where(col("n_members") > maxBucket)
 
   /** Drop every row whose `keys` bucket exceeds `maxBucket` members.
     * Lazy: no job until the returned plan executes. The oversized-key set
     * is tiny by construction (≤ total/maxBucket keys), hence broadcast. */
-  def cap(df: DataFrame, keys: Seq[String], maxBucket: Int,
-      distinctOn: Option[String] = None): DataFrame = {
+  def cap(df: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame = {
     require(maxBucket >= 2, s"maxBucket $maxBucket too small to form any pair")
     df.join(
-      broadcast(oversized(df, keys, maxBucket, distinctOn).select(keys.map(col): _*)),
+      broadcast(oversized(df, keys, maxBucket).select(keys.map(col): _*)),
       keys, "left_anti")
   }
 }

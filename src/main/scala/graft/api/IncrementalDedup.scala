@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * The index is a [[SegmentedState]] root: this object owns only the
   * segment naming (`seg%05d`, one past the highest name on disk), the fold
-  * (`bkt` repartition, optional `dropDuplicates`) and the readers; the live
-  * list, append and compaction commits, vacuum and size-triggered
-  * compaction are the shared lifecycle.
+  * (`bkt` repartition) and the readers; the live list, batch ledger,
+  * append and compaction commits, vacuum and size-triggered compaction are
+  * the shared lifecycle.
   *
   * {{{
   *   root/seg00000/bkt=0/…/bkt=63/  parquet (id, band, bv) hash-bucketed
@@ -36,9 +36,10 @@ import org.apache.spark.sql.functions._
   * already-written parquet (stable under later appends — no lazy recompute
   * hazard), and the manifest advances last. A crash between write and
   * point leaves an orphan directory that is never read — readers see
-  * either the old or the new index, never a torn one. The index carries
-  * no batch ledger (callers such as the streaming ingest keep their own),
-  * so its in-flight directories are guarded from vacuum in-process only.
+  * either the old or the new index, never a torn one. A caller that
+  * passes a batch id (the streaming ingest) advances the manifest's batch
+  * ledger in that same commit. Segment names carry no batch id, so
+  * in-flight directories are guarded from vacuum in-process only.
   *
   * Semantics: an increment document is a duplicate iff it shares ≥1 LSH
   * band bucket with any SMALLER-ID document already present (prior
@@ -47,9 +48,8 @@ import org.apache.spark.sql.functions._
   * That choice is what makes the pipeline replayable and idempotent: the
   * incremental decisions equal one whole-corpus batch query over the
   * union (the `q_incr_dedup` DuckDB oracle and the prefix-parity /
-  * cut-point-independence tests in `MaintenanceSpec`), and a crash-window
-  * double-append of the same ids provably changes no verdict
-  * (`StreamingSpec`). The CONTRACT that makes id order meaningful:
+  * cut-point-independence tests in `MaintenanceSpec`). The CONTRACT that
+  * makes id order meaningful:
   * callers assign ids monotonically with ingest order (ingest-time
   * sequence, snowflake-style ids — what a production feed does anyway).
   * A caller violating it (say content-hash ids) still gets the exact
@@ -167,12 +167,23 @@ object IncrementalDedup {
     * ([[graft.streaming.StreamIncrDedup.ingestBatch]] and the
     * `q_incr_dedup` oracle row both do). An increment with zero bands is
     * legal: it writes an empty (orphaned, vacuumable) segment, returns an
-    * empty frame, and leaves the index untouched. */
+    * empty frame, and leaves the index untouched.
+    *
+    * `batchId`, when given, must not be in the ledger yet; the commit that
+    * appends the segment records it (a zero-band increment then advances
+    * the ledger alone). `onDecisions` runs on the decision frame inside
+    * the root's append guard, after the segment is written and before that
+    * commit: a caller that persists the decisions there (the streaming
+    * ingest) publishes them with the segment, and if it throws, nothing is
+    * committed and the segment stays an orphan. */
   def ingest(spark: SparkSession, root: String, incBands: DataFrame,
-      maxBucket: Int = 10000, distinctCensus: Boolean = false): DataFrame =
+      maxBucket: Int = 10000, batchId: Option[Long] = None,
+      onDecisions: DataFrame => Unit = _ => ()): DataFrame =
       SegmentedState.writing(root) {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
     val cur0 = StateManifest.current(root)
+    batchId.foreach(b => require(!cur0.exists(_.lastBatch >= b),
+      s"batch $b is already in the ledger at $root"))
     val prior = cur0.map(_.segments).getOrElse(Nil)
     val segName = claimSeg(root)
     // cluster by bkt before the partitioned write: without it every write
@@ -188,8 +199,8 @@ object IncrementalDedup {
     // explicit schema: an increment can legitimately carry ZERO bands (a
     // micro-batch of documents all shorter than the shingle width writes
     // an empty segment) and schema inference over an empty directory
-    // throws — which in the streaming path would crash BEFORE the batch
-    // ledger records, a permanent replay-crash loop on realistic input
+    // throws — which in the streaming path would crash BEFORE the commit,
+    // a permanent replay-crash loop on realistic input
     val segSchema = incProjected.schema
     val inc = spark.read.schema(segSchema).parquet(s"$root/$segName")
     // directory-level pruning: the index join only needs the bkt
@@ -209,17 +220,7 @@ object IncrementalDedup {
       case Some(idx) => idx.withColumn("__new", lit(0)).unionByName(inc.withColumn("__new", lit(1)))
       case None => inc.withColumn("__new", lit(1))
     }
-    // census mode: on a clean index the row census and the distinct-id
-    // census are identical (one row per (id, band) by construction), and
-    // the row census is cheaper (map-side count, no distinct exchange —
-    // measured ~2 s/query at sf0.1). A caller whose index MAY carry exact
-    // duplicate rows — the streaming ingest's crash-window replay
-    // (StreamIncrDedup) — opts into the distinct census so inflated row
-    // counts cannot tip a bucket over the cap; duplicates then cannot
-    // affect anything (strict id < match, distinct prior-count, distinct
-    // flood guard).
-    val capped = BucketCap.cap(all, Seq("band", "bv"), maxBucket,
-      distinctOn = if (distinctCensus) Some("id") else None)
+    val capped = BucketCap.cap(all, Seq("band", "bv"), maxBucket)
     val x = capped.as("x")
     val y = capped.where(col("__new") === 1).as("y")
     val hits = x.join(y,
@@ -233,14 +234,16 @@ object IncrementalDedup {
         coalesce(col("n_prior"), lit(0L)).as("n_prior"),
         col("n_prior").isNull.as("keep"))
 
+    onDecisions(decisions)
     // an empty segment carries no information: leave it OFF the live list
     // (the claimed directory becomes a vacuumable orphan) so index readers
     // never meet a file-less directory. A racing compaction keeps the
     // index CONTENT, so these decisions stay valid when the append
     // re-applies onto its list.
-    if (touched.nonEmpty)
-      SegmentedState.publish(root, cur0, None,
-        StateManifest.schemaFingerprint(segSchema))(_ :+ segName)
+    val seg = if (touched.isEmpty) None else Some(segName)
+    if (seg.nonEmpty || batchId.nonEmpty)
+      SegmentedState.publish(root, cur0, batchId,
+        StateManifest.schemaFingerprint(segSchema))(_ ++ seg)
     decisions
   }
 
@@ -262,28 +265,14 @@ object IncrementalDedup {
     * Returns the new segment name; None when ≤1 segment is live or when
     * a concurrent ingest committed mid-compaction (re-run on the new
     * list). */
-  def compactIndex(spark: SparkSession, root: String,
-      dedupRows: Boolean = true): Option[String] =
+  def compactIndex(spark: SparkSession, root: String): Option[String] =
     SegmentedState.compact(root) { cur =>
       if (cur.segments.size <= 1) None
       else {
         val segName = claimSeg(root)
-        val merged = cur.segments.map(sg => spark.read.parquet(s"$root/$sg"))
+        cur.segments.map(sg => spark.read.parquet(s"$root/$sg"))
           .reduce(_.unionByName(_))
-        // drop exact row duplicates: a crash-window replay of a streaming
-        // ingest (StreamIncrDedup) can double-append a batch's fingerprints,
-        // which never changes a verdict but inflates the flood-guard's
-        // row-count census — compaction is where the true census is
-        // restored. `dedupRows = false` lets a caller whose ingest protocol
-        // PROVABLY never double-appends (driver-sequential ingests, no
-        // replay window — e.g. the q_incr_dedup batch lifecycle) skip the
-        // dropDuplicates exchange: the merged rows are then already unique
-        // ((id, band) is unique within a segment by minhashBands
-        // construction, and sequential ingests never repeat an id), so the
-        // pass would be a full extra shuffle + aggregate of the whole index
-        // for nothing. Streaming maintainers keep the default.
-        val rows = if (dedupRows) merged.dropDuplicates("id", "band", "bv") else merged
-        rows.repartition(col("bkt"))
+          .repartition(col("bkt"))
           .write.mode("overwrite").partitionBy("bkt").parquet(s"$root/$segName")
         Some(Seq(segName) -> segName)
       }

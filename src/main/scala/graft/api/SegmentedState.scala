@@ -1,8 +1,9 @@
 package graft.api
 
 /** The ONE lifecycle of a segmented state root — the maintained ANN index
-  * ([[AnnIngest]]), the dedup band index ([[IncrementalDedup]]) and the
-  * join-MV history ([[IncrementalJoinAgg]]) all run through it. A root
+  * ([[AnnIngest]]), the dedup band index ([[IncrementalDedup]]), the
+  * join-MV history ([[IncrementalJoinAgg]]) and the stream join view
+  * ([[graft.streaming.StreamJoinView]]) all run through it. A root
   * holds immutable segment directories plus the [[StateManifest]] that
   * lists the live ones:
   *
@@ -35,9 +36,9 @@ package graft.api
   *     first directory write through its commit ([[writing]]), every
   *     commit runs under it, and vacuum and retire hold it exclusively — a
   *     claimed-but-uncommitted directory or a live commit's temp file is
-  *     never scanned. This is the only protection for kinds without a
-  *     batch ledger (the dedup index, whose compaction may claim a name
-  *     above an in-flight ingest's);
+  *     never scanned. This is the only protection for kinds whose names
+  *     carry no batch id (the dedup index, whose compaction may claim a
+  *     name above an in-flight ingest's);
   *   - across processes, a name whose batch id ([[Kind.batchOf]]) is above
   *     the manifest ledger belongs to a writer that has not committed yet
   *     and is skipped.

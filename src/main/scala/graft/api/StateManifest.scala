@@ -10,9 +10,10 @@ final case class Manifest(
 /** THE single manifest format for every versioned-parquet state directory
   * in the engine — the credible Delta/Iceberg stand-in SCALE.md §C
   * promises: the segmented states ([[SegmentedState]]: the ANN index, the
-  * dedup band index, the join-MV history), the single-version roots
-  * ([[graft.streaming.IncrementalAgg]], [[MaterializedView.refresh]], the
-  * join-MV view head) and the build-once artifacts ([[ModelStore]]: fitted
+  * dedup band index, the join-MV history, the stream join view), the
+  * single-version roots ([[graft.streaming.IncrementalAgg]],
+  * [[MaterializedView.refresh]], the join-MV view head) and the
+  * build-once artifacts ([[ModelStore]]: fitted
   * models, the ANN-cache index) all commit through this one code path,
   * [[commitIf]], so there is one crash matrix to test.
   *

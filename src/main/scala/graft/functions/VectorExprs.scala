@@ -100,12 +100,19 @@ object Md5Long56 {
     v
   }
 
-  /** Entry point referenced from generated code. */
-  def hashUtf8(s: org.apache.spark.unsafe.types.UTF8String): Long = {
+  private def hashBytes(b: Array[Byte]): Long = {
     val md = local.get()
     md.reset()
-    first56Bits(md.digest(s.getBytes))
+    first56Bits(md.digest(b))
   }
+
+  /** Entry point referenced from generated code. */
+  def hashUtf8(s: org.apache.spark.unsafe.types.UTF8String): Long = hashBytes(s.getBytes)
+
+  /** The same hash of a host-side string (its UTF-8 bytes), for row-wise
+    * code that must match the column function bit-for-bit. */
+  def hashString(s: String): Long =
+    hashBytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 }
 
 object VectorExprs {

@@ -317,12 +317,7 @@ object Dedup {
     // segment — layout maintenance must not change one decision, which
     // this oracle row now gates. No vacuum here: d1 is lazy and still
     // reads the pre-compact directories (see IncrementalDedup.vacuum).
-    // dedupRows = false: this lifecycle's ingests are driver-sequential
-    // over DISJOINT id ranges (<1M, 1M..2M, ≥2M) with no replay window,
-    // so the merged segments are provably duplicate-free and the
-    // dropDuplicates exchange would re-shuffle the whole index for
-    // nothing (optimization r19; parity spec-pinned in MaintenanceSpec)
-    graft.api.IncrementalDedup.compactIndex(s, root, dedupRows = false)
+    graft.api.IncrementalDedup.compactIndex(s, root)
     val d2 = full(graft.api.IncrementalDedup.ingest(s, root,
       bands(col("id") >= 2000000L)), col("doc_id") >= 2000000L)
     d1.unionByName(d2).orderBy("doc_id")

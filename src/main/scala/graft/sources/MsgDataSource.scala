@@ -69,11 +69,6 @@ object MsgDataSource {
     StructField("partition", IntegerType, nullable = false),
     StructField("seq", LongType, nullable = false)))
 
-  /** Legacy (pre-topic-named offsets) global key stride:
-    * key = topicIdx * TopicStride + partition. Kept only to decode
-    * checkpoints written before offsets carried topic names. */
-  private[sources] val TopicStride = 1 << 20
-
   private[sources] def topicsOf(options: CaseInsensitiveStringMap): Seq[String] = {
     val b = options.get("broker")
     require(b != null, "graft-msgs requires .option(\"broker\", <registry name[,name...]>)")
@@ -156,17 +151,6 @@ object MsgOffset {
     }
     MsgOffset(out.result())
   }
-
-  /** Decode a pre-topic-named checkpoint (`{"<globalKey>":seq}` with
-    * globalKey = topicIdx * TopicStride + partition) against the CURRENT
-    * topic order — the only interpretation the legacy format permits. */
-  def parseLegacy(json: String, topics: Seq[String]): MsgOffset = {
-    val flat = parseFlat(json.trim.stripPrefix("{").stripSuffix("}"))
-    MsgOffset(flat.groupBy { case (g, _) => topics(g / MsgDataSource.TopicStride) }
-      .map { case (t, m) =>
-        t -> m.map { case (g, s) => (g % MsgDataSource.TopicStride) -> s }
-      })
-  }
 }
 
 final class MsgMicroBatchStream(
@@ -242,18 +226,9 @@ final class MsgMicroBatchStream(
     }
   }
 
-  /** Topic-named format decodes directly; a flat (pre-topic-named) map is
-    * decoded against the CURRENT topic order — the legacy format's only
-    * possible interpretation — with a warning. */
-  override def deserializeOffset(json: String): Offset = {
-    val body = json.trim.stripPrefix("{").stripSuffix("}")
-    if (body.contains("{") || body.trim.isEmpty) MsgOffset.parse(json)
-    else {
-      log.warn(s"decoding legacy index-keyed offset $json against topic list " +
-        s"[${topics.mkString(", ")}]; the list order MUST match the run that wrote it")
-      MsgOffset.parseLegacy(json, topics)
-    }
-  }
+  /** Only the topic-named format decodes; a flat index-keyed map (from
+    * before offsets carried topic names) is refused by [[MsgOffset.parse]]. */
+  override def deserializeOffset(json: String): Offset = MsgOffset.parse(json)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = validated(start.asInstanceOf[MsgOffset])

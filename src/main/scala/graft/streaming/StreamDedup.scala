@@ -51,14 +51,11 @@ object StreamDedup {
     * occurrence-weighted ±1 sum of token bit i is positive. Pinned against
     * the batch aggregate in StreamingSpec. */
   def simhashOf(text: String, bits: Int = 48): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
     val counts = scala.collection.mutable.HashMap.empty[String, Long]
     text.split(" ", -1).foreach(w => counts.update(w, counts.getOrElse(w, 0L) + 1))
     val sums = new Array[Long](bits)
     counts.foreach { case (w, c) =>
-      md.reset()
-      val hex = md.digest(w.getBytes("UTF-8")).take(7).map("%02x".format(_)).mkString
-      val h = java.lang.Long.parseLong(hex, 16)
+      val h = graft.functions.Md5Long56.hashString(w)
       var i = 0
       while (i < bits) { sums(i) += c * (((h >> i) & 1L) * 2 - 1); i += 1 }
     }

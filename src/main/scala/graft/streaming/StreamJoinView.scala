@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.api.{Manifest, SegmentedState, StateManifest}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming face of [[graft.api.IncrementalJoin]]: maintain the inner
@@ -11,14 +12,14 @@ import org.apache.spark.sql.functions._
   * {{{  ΔJ = ΔA ⋈ B_prev  ∪  A_prev ⋈ ΔB  ∪  ΔA ⋈ ΔB  }}}
   *
   * State layout under `root/`: `A/batch=<id>/`, `B/batch=<id>/` hold the
-  * accumulated sides, `view/batch=<id>/` the per-batch join increments —
-  * everything is APPEND-only and keyed by batchId, so a replayed batch
-  * OVERWRITES its own partition directories and reads exclude the
-  * in-flight id: exactly-once without a transaction log (the
-  * batch-subdirectory analog of [[IncrementalAgg]]'s versioned pointer;
-  * `StreamingSpec` applies one batch twice to prove idempotence, and pins
-  * the maintained view bit-identical to the batch
-  * [[graft.api.IncrementalJoin.maintain]] and to the full join — the
+  * accumulated sides, `view/batch=<id>/` the per-batch join increments.
+  * The root is a [[graft.api.SegmentedState]] root: one commit publishes a
+  * batch's three directories together with its id in the manifest's
+  * batch ledger, and every read takes the live list, so a batch that
+  * crashed before its commit is never read and its replay overwrites its
+  * directories. A replay of a committed batch is a no-op (`StreamingSpec`
+  * replays batches, and pins the maintained view bit-identical to the
+  * batch [[graft.api.IncrementalJoin.maintain]] and to the full join — the
   * suite's fifth batch↔stream parity pair).
   *
   * Scale shape: per batch, two delta-vs-history joins and one delta-delta
@@ -40,84 +41,62 @@ object StreamJoinView {
       keys: Seq[String], aCols: Seq[String], bCols: Seq[String],
       sideCol: String = "side", signCol: Option[String] = None)
 
-  /** State roots are plain paths resolved through the Hadoop FileSystem
-    * API, so the batch=<id> layout works wherever Spark's parquet I/O does
-    * (HDFS/S3/local) — a `java.io.File` listing would silently find
-    * nothing on a remote scheme and drop the history cross terms. */
-  private def stateFs(spark: SparkSession, path: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+  private val Dirs = Seq("A", "B", "view")
+
+  private object Kind extends SegmentedState.Kind {
+    def onDisk(root: String): Seq[String] =
+      Dirs.flatMap(d => SegmentedState.children(s"$root/$d").map(n => s"$d/$n"))
+    def batchOf(name: String): Option[Long] =
+      name.split("/batch=", 2).lift(1).flatMap(_.toLongOption)
   }
 
-  private def batchDirs(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Seq[Long] =
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("batch=") =>
-        st.getPath.getName.stripPrefix("batch=").toLongOption
-    }.flatten
-
-  /** Accumulated side state STRICTLY BEFORE `beforeBatch`. The strict
-    * ordering is load-bearing for replay correctness: the delta rule is
-    * order-dependent (batch N's increment joins its delta against batches
-    * < N only — later batches' increments claim the cross terms against
-    * N), so a replayed batch must see exactly the state it saw the first
-    * time, not "everything except itself". */
-  private def readSide(spark: SparkSession, path: String, beforeBatch: Long,
-      cols: Seq[String]): Option[DataFrame] = {
-    val (fs, p) = stateFs(spark, path)
-    if (!batchDirs(fs, p).exists(_ < beforeBatch)) None
-    else Some(
-      spark.read.option("basePath", path).parquet(path)
-        .filter(col("batch") < beforeBatch)
-        .select(cols.map(col): _*))
+  /** The union of the live directories under `dir` (`A`, `B` or `view`) of
+    * the manifest `m`; None when it lists none. */
+  private def read(spark: SparkSession, root: String, m: Option[Manifest],
+      dir: String): Option[DataFrame] = {
+    val segs = m.map(Kind.tracked).getOrElse(Nil).filter(_.startsWith(s"$dir/"))
+    if (segs.isEmpty) None else Some(spark.read.parquet(segs.map(sg => s"$root/$sg"): _*))
   }
 
-  /** Apply one micro-batch (idempotent on `batchId`). */
+  /** Apply one micro-batch (idempotent on `batchId`). The delta rule is
+    * order-dependent (batch N's increment joins its delta against the
+    * batches before N only — later batches' increments claim the cross
+    * terms against N), and the sides read here are the live list of the
+    * manifest this batch commits on, which holds exactly the batches
+    * before it: a replay sees the state the first attempt saw. */
   def applyBatch(batch: DataFrame, batchId: Long, root: String,
-      spec: JoinViewSpec): Unit = {
-    val spark = batch.sparkSession
-    // replay hygiene: a crashed attempt can leave a torn parquet file under
-    // this batch's OWN partition dirs; readSide's schema inference walks the
-    // whole side directory before partition pruning, so a bad footer there
-    // wedges the replay. The in-flight batch's dirs are about to be
-    // overwritten anyway — clear them before reading prior state.
-    Seq(s"$root/A/batch=$batchId", s"$root/B/batch=$batchId",
-        s"$root/view/batch=$batchId").foreach { d =>
-      val (fs, p) = stateFs(spark, d)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val extra = spec.signCol.toSeq
-    val dA = batch.filter(col(spec.sideCol) === "A")
-      .select((spec.keys ++ spec.aCols ++ extra).map(col): _*)
-    val dB = batch.filter(col(spec.sideCol) === "B")
-      .select((spec.keys ++ spec.bCols ++ extra).map(col): _*)
-    val aPrev = readSide(spark, s"$root/A", batchId, spec.keys ++ spec.aCols ++ extra)
-    val bPrev = readSide(spark, s"$root/B", batchId, spec.keys ++ spec.bCols ++ extra)
-    def j(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
-      spec.signCol match {
+      spec: JoinViewSpec): Unit = SegmentedState.writing(root) {
+    val base = StateManifest.current(root)
+    if (!base.exists(_.lastBatch >= batchId)) {
+      val spark = batch.sparkSession
+      val extra = spec.signCol.toSeq
+      val aCols = spec.keys ++ spec.aCols ++ extra
+      val bCols = spec.keys ++ spec.bCols ++ extra
+      val dA = batch.filter(col(spec.sideCol) === "A").select(aCols.map(col): _*)
+      val dB = batch.filter(col(spec.sideCol) === "B").select(bCols.map(col): _*)
+      val aPrev = read(spark, root, base, "A").map(_.select(aCols.map(col): _*))
+      val bPrev = read(spark, root, base, "B").map(_.select(bCols.map(col): _*))
+      def j(a: DataFrame, b: DataFrame) = spec.signCol match {
         case Some(sc) => graft.api.IncrementalJoin.joinSignedPair(a, b, spec.keys, sc)
         case None => a.join(b, spec.keys)
       }
-    val deltaJ = Seq(
-      bPrev.map(b => j(dA, b)), // ΔA ⋈ B_prev
-      aPrev.map(a => j(a, dB)), // A_prev ⋈ ΔB
-      Some(j(dA, dB))           // ΔA ⋈ ΔB
-    ).flatten.reduce(_ unionByName _)
-    // per-batch partition dirs: a replay overwrites exactly its own output
-    deltaJ.write.mode("overwrite").parquet(s"$root/view/batch=$batchId")
-    dA.write.mode("overwrite").parquet(s"$root/A/batch=$batchId")
-    dB.write.mode("overwrite").parquet(s"$root/B/batch=$batchId")
+      val deltaJ = Seq(
+        bPrev.map(b => j(dA, b)), // ΔA ⋈ B_prev
+        aPrev.map(a => j(a, dB)), // A_prev ⋈ ΔB
+        Some(j(dA, dB))           // ΔA ⋈ ΔB
+      ).flatten.reduce(_ unionByName _)
+      deltaJ.write.mode("overwrite").parquet(s"$root/view/batch=$batchId")
+      dA.write.mode("overwrite").parquet(s"$root/A/batch=$batchId")
+      dB.write.mode("overwrite").parquet(s"$root/B/batch=$batchId")
+      SegmentedState.publish(root, base, Some(batchId),
+        StateManifest.schemaFingerprint(deltaJ.schema))(
+        _ ++ Dirs.map(d => s"$d/batch=$batchId"))
+    }
   }
 
-  /** The maintained view (all increments so far). */
-  def view(spark: SparkSession, root: String): Option[DataFrame] = {
-    val (fs, p) = stateFs(spark, s"$root/view")
-    if (batchDirs(fs, p).isEmpty) None
-    else Some(spark.read.option("basePath", s"$root/view").parquet(s"$root/view")
-      .drop("batch"))
-  }
+  /** The maintained view (all committed increments so far). */
+  def view(spark: SparkSession, root: String): Option[DataFrame] =
+    read(spark, root, StateManifest.current(root), "view")
 
   /** Signed-mode live view: net count per distinct row, retracted rows
     * gone ([[graft.api.IncrementalJoin.net]] over the increments). */

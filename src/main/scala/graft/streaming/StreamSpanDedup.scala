@@ -35,12 +35,6 @@ private final case class CanonEntry(docId: Long, chunkId: Int, tsMs: Long)
   * key counts, [[StatefulOps.useRocksDbStateStore]]). */
 object StreamSpanDedup {
 
-  private def md5Long56(w: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(w.getBytes("UTF-8")).take(7).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex, 16)
-  }
-
   /** Content-defined chunks of one document, bit-identical to the batch
     * `Curation.cdcChunk`: a boundary falls before token i (i ≥ 1) exactly
     * when `md5Long(w[i]) % p == 0`; chunks shorter than `minToks` drop.
@@ -49,7 +43,8 @@ object StreamSpanDedup {
   def cdcChunksOf(text: String, p: Int = 16, minToks: Int = 8): Seq[(Int, String)] = {
     val w = text.split(" ", -1)
     val bnds = 0 +:
-      (1 until w.length).filter(i => md5Long56(w(i)) % p == 0) :+ w.length
+      (1 until w.length)
+        .filter(i => graft.functions.Md5Long56.hashString(w(i)) % p == 0) :+ w.length
     val md = java.security.MessageDigest.getInstance("MD5")
     (0 until bnds.length - 1).flatMap { j =>
       val (start, end) = (bnds(j), bnds(j + 1))

@@ -47,7 +47,7 @@ class BrokerSourceSpec extends SparkSpec {
     assert(MsgOffset.parse("""{"t":{}}""") == MsgOffset(Map("t" -> Map.empty[Int, Long])))
   }
 
-  test("checkpoint survives topic-list reorder; removal fails fast; legacy decodes") {
+  test("checkpoint survives topic-list reorder; removal and flat offsets fail loudly") {
     import graft.sources.{MsgInputPartition, MsgMicroBatchStream}
     val a = MsgBroker.create("ord_a", numPartitions = 1)
     val b = MsgBroker.create("ord_b", numPartitions = 1)
@@ -77,10 +77,12 @@ class BrokerSourceSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("ord_b"))
 
-    // legacy flat (index-keyed) checkpoint decodes against the current order
-    val legacy = stream(Seq("ord_a", "ord_b"))
-    val dec = legacy.deserializeOffset(s"""{"0":2,"${1 << 20}":1}""").asInstanceOf[MsgOffset]
-    assert(dec == MsgOffset(Map("ord_a" -> Map(0 -> 2L), "ord_b" -> Map(0 -> 1L))))
+    // a flat (index-keyed) offset from before offsets carried topic names
+    // is refused, never remapped onto the current topic order
+    val flat = intercept[IllegalArgumentException] {
+      stream(Seq("ord_a", "ord_b")).deserializeOffset(s"""{"0":2,"${1 << 20}":1}""")
+    }
+    assert(flat.getMessage.contains("malformed"), flat.getMessage)
   }
 
   test("fan-out end-to-end; commit acks the broker (checkpoint-coupled)") {

@@ -6,9 +6,7 @@ import graft.api.BucketCap
 
 /** The banding flood guard under every MinHash/SimHash dedup path: buckets
   * larger than the cap are excluded wholesale (conservative: dedup goes
-  * blind on them, never quadratic), everything else passes untouched. The
-  * distinct-census mode must make exact duplicate rows — the incremental
-  * index after a crash-window double-append — invisible to the census.
+  * blind on them, never quadratic), everything else passes untouched.
   */
 class BucketCapSpec extends SparkSpec {
   import spark.implicits._
@@ -32,19 +30,5 @@ class BucketCapSpec extends SparkSpec {
     assert(kept.map(_._1) == Set("b", "c"), "only the a-bucket is past the cap")
     assert(kept == frame.as[(String, Long)].collect().toSet.filter(_._1 != "a"),
       "surviving rows must pass through unmodified")
-  }
-
-  test("distinct census is blind to exact duplicate rows; row census is not") {
-    // b doubled: 6 rows but still 3 distinct ids — a crash-window replay
-    val doubledB = frame.unionAll(frame.where($"bv" === "b"))
-    // row census: b crosses the cap early and is (conservatively) excluded
-    assert(BucketCap.cap(doubledB, Seq("bv"), maxBucket = 3)
-      .as[(String, Long)].collect().forall(_._1 == "c"))
-    // distinct census: b stays under the cap, duplicates and all
-    val kept = BucketCap.cap(doubledB, Seq("bv"), maxBucket = 3,
-      distinctOn = Some("id")).as[(String, Long)].collect()
-    assert(kept.map(_._1).toSet == Set("b", "c"))
-    assert(kept.count(_._1 == "b") == 6, "cap filters buckets, not rows: " +
-      "the duplicate rows themselves survive (compaction reclaims them)")
   }
 }

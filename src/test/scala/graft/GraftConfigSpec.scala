@@ -116,5 +116,8 @@ class GraftConfigSpec extends AnyFunSuite {
     def homes(token: String) = sources.collect { case (n, src) if src.contains(token) => n }.toSet
     assert(homes("StateManifest.commitIf(") == Set("SegmentedState.scala", "ModelStore.scala"))
     assert(homes("ATOMIC_MOVE") == Set("AtomicFiles.scala"))
+    // and the one pointer file is the manifest's: a batch ledger lives in
+    // the manifest, never in a second file beside it
+    assert(homes("AtomicFiles.writePointer(") == Set("StateManifest.scala"))
   }
 }

@@ -327,33 +327,29 @@ class MaintenanceSpec extends SparkSpec {
       "post-vacuum index must be exactly pre-compact content + wave-2 bands")
   }
 
-  test("incr_dedup compactIndex(dedupRows = false): identical index on a duplicate-free root") {
-    // optimization r19: a caller whose ingests provably never double-append
-    // may skip the dropDuplicates exchange — the compacted content must be
-    // IDENTICAL to the safe default on such a root, and the layout
-    // invariant (one file per bkt dir) must hold unchanged
+  test("incr_dedup compactIndex: the live rows, unchanged, in one file per bucket") {
+    // compaction is layout-only: the compacted content is exactly the
+    // union of the live segments' rows, and each bkt directory holds one
+    // file again
     import graft.api.{IncrementalDedup, TextDedup}
     import graft.operators.Corpora
     val hashes = Corpora.shingleHashes(spark, sf()).withColumnRenamed("doc_id", "id")
     def bands(cond: org.apache.spark.sql.Column) = TextDedup.minhashBands(hashes.where(cond))
     def idxRows(root: String) = IncrementalDedup.index(spark, root).get.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq.sorted
-    val fast = java.nio.file.Files.createTempDirectory("incr-dedup-nodd").toString
-    val safe = java.nio.file.Files.createTempDirectory("incr-dedup-dd").toString
-    for (root <- Seq(fast, safe)) {
-      IncrementalDedup.ingest(spark, root, bands(col("id") < 1000000L))
-      IncrementalDedup.ingest(spark, root,
-        bands(col("id") >= 1000000L && col("id") < 2000000L)).collect()
-    }
-    assert(IncrementalDedup.compactIndex(spark, fast, dedupRows = false).nonEmpty)
-    assert(IncrementalDedup.compactIndex(spark, safe).nonEmpty)
-    assert(idxRows(fast) == idxRows(safe),
-      "dedupRows=false compaction diverged from the safe default on a duplicate-free root")
-    val bktDirs = new java.io.File(s"$fast/${IncrementalDedup.segments(fast).head}")
+    val root = java.nio.file.Files.createTempDirectory("incr-dedup-compact").toString
+    IncrementalDedup.ingest(spark, root, bands(col("id") < 1000000L))
+    IncrementalDedup.ingest(spark, root,
+      bands(col("id") >= 1000000L && col("id") < 2000000L)).collect()
+    val before = idxRows(root)
+    assert(IncrementalDedup.compactIndex(spark, root).nonEmpty)
+    assert(IncrementalDedup.segments(root).size == 1)
+    assert(idxRows(root) == before, "compaction changed the index rows")
+    val bktDirs = new java.io.File(s"$root/${IncrementalDedup.segments(root).head}")
       .listFiles().filter(_.getName.startsWith("bkt="))
     assert(bktDirs.nonEmpty && bktDirs.forall(
       _.listFiles().count(f => f.getName.endsWith(".parquet")) == 1),
-      "dedupRows=false compacted segment must still hold one file per bucket")
+      "the compacted segment must hold one file per bucket")
   }
 
   test("incr_dedup: order is global strict id order — the documented non-monotone-id behavior") {

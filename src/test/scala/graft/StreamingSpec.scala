@@ -828,20 +828,33 @@ class StreamingSpec extends SparkSpec {
 
     // replaying batch 0 with identical data (the crash-recovery case:
     // Spark re-runs the same offsets) must leave the view unchanged —
-    // partition-dir overwrite, not append
+    // the manifest ledger already covers it
     StreamJoinView.applyBatch(
       b0.toDF("side", "k", "av", "bv"), batchId = 0L, root, spec)
     assert(viewNow() == streamed, "replayed batch duplicated view rows")
 
+    // batch 2 crashed before its commit: roll the manifest back past that
+    // commit — its history file never appeared, and the pointer still
+    // names the commit of batch 1
+    def uncommitBatch2(): Unit = {
+      val cur = graft.api.StateManifest.current(root).get
+      def hist(v: Long) = java.nio.file.Paths.get(root, s"_MANIFEST.v$v")
+      java.nio.file.Files.delete(hist(cur.version))
+      java.nio.file.Files.copy(hist(cur.version - 1), java.nio.file.Paths.get(root, "_MANIFEST"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(graft.api.StateManifest.current(root).map(_.lastBatch).contains(1L))
+    }
+
     // torn-write crash: batch 2 wrote its view increment but died before
     // its state dirs landed. The replay must regenerate the SAME increment
-    // (it reads strictly-prior state, so the half-written batch can't see
+    // (it reads only committed state, so the half-written batch can't see
     // itself) and restore the state dirs.
     def rmr(p: java.nio.file.Path): Unit = {
       if (java.nio.file.Files.isDirectory(p))
         java.nio.file.Files.list(p).forEach(rmr(_))
       java.nio.file.Files.deleteIfExists(p)
     }
+    uncommitBatch2()
     rmr(java.nio.file.Paths.get(s"$root/A/batch=2"))
     rmr(java.nio.file.Paths.get(s"$root/B/batch=2"))
     StreamJoinView.applyBatch(
@@ -851,9 +864,10 @@ class StreamingSpec extends SparkSpec {
       "state dir not restored by replay")
 
     // torn FILE crash: batch 2's own dir holds a half-written parquet file
-    // (garbage bytes, no valid footer). applyBatch clears the in-flight
-    // batch's dirs before reading prior state, so the bad footer never
-    // reaches schema inference and the replay heals in place.
+    // (garbage bytes, no valid footer) and its commit never happened. An
+    // uncommitted batch's dirs are never read, so the bad footer never
+    // reaches schema inference, and the replay's overwrite heals in place.
+    uncommitBatch2()
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$root/A/batch=2/part-torn.snappy.parquet"),
       Array[Byte]('P', 'A', 'R', '1', 0, 1, 2, 3))
@@ -893,6 +907,30 @@ class StreamingSpec extends SparkSpec {
     q.stop()
     assert(netNow() == Seq((2L, "y", 20, 1L)),
       "late partner of a retracted row must not resurrect it")
+  }
+
+  test("stream join view: an uncommitted batch is never read; its replay overwrites it") {
+    import graft.streaming.StreamJoinView
+    val root = Files.createTempDirectory("sjv-unc").toString
+    val spec = StreamJoinView.JoinViewSpec(Seq("k"), Seq("av"), Seq("bv"))
+    def applyRows(rows: Seq[(String, Long, String, Int)], id: Long): Unit =
+      StreamJoinView.applyBatch(rows.toDF("side", "k", "av", "bv"), id, root, spec)
+    def viewNow(): Seq[(Long, String, Int)] =
+      StreamJoinView.view(spark, root).get.collect()
+        .map(r => (r.getAs[Long]("k"), r.getAs[String]("av"), r.getAs[Int]("bv")))
+        .toSeq.sorted
+
+    applyRows(Seq(("A", 1L, "x", 0), ("B", 1L, "", 10), ("B", 2L, "", 20)), 0L)
+    applyRows(Seq(("A", 2L, "y", 0), ("B", 1L, "", 11)), 1L)
+    val committed = Seq((1L, "x", 10), (1L, "x", 11), (2L, "y", 20))
+    assert(viewNow() == committed)
+    // batch 9 wrote its view increment, then died before its commit
+    Seq((99L, "ghost", 99)).toDF("k", "av", "bv").write.parquet(s"$root/view/batch=9")
+    assert(viewNow() == committed, "the uncommitted view increment is visible")
+    // its replay overwrites the directory and commits the real increment
+    applyRows(Seq(("A", 9L, "z", 0), ("B", 9L, "", 90)), 9L)
+    assert(viewNow() == (committed :+ ((9L, "z", 90))).sorted,
+      "the replay kept the uncommitted rows")
   }
 
   test("stream join-agg view: MV state ≡ definition after every prefix; restart + compaction live") {
@@ -1765,7 +1803,7 @@ class StreamingSpec extends SparkSpec {
     val q = StreamIncrDedup.run(spark, input.toDS(), root, out, ckpt)
     waves.foreach { w => input.addData(w: _*); q.processAllAvailable() }
     q.stop()
-    assert(StreamIncrDedup.appliedBatches(root) == Set(0L, 1L, 2L, 3L))
+    assert(graft.api.StateManifest.current(root).map(_.lastBatch).contains(3L))
 
     // batch control: the same waves through IncrementalDedup.ingest plus
     // the same doc-set compensation ingestBatch applies (short docs keep)
@@ -1806,16 +1844,53 @@ class StreamingSpec extends SparkSpec {
     assert(IncrementalDedup.segments(root) == segsBefore, "replay appended a segment")
     assert(spark.read.parquet(out).count() == outCount, "replay re-emitted decisions")
 
-    // crash-window double-append (pointer advanced, ledger lost): the
-    // duplicate fingerprints are invisible to the strict x.id < y.id match
-    // and the distinct census — decisions replay IDENTICAL, index merely
-    // bloats until compaction. distinctCensus = true is the streaming
-    // ingest's own setting (StreamIncrDedup.ingestBatch) — the invariant
-    // being pinned is specifically the distinct-census one.
-    val replayed = rows(IncrementalDedup.ingest(spark, root, bands(waves(2)),
-      distinctCensus = true))
+    // a batch caller (no ledger) re-ingesting ids already present: the
+    // duplicate fingerprints are invisible to the strict x.id < y.id
+    // match — decisions replay IDENTICAL, the index merely bloats
+    val replayed = rows(IncrementalDedup.ingest(spark, root, bands(waves(2))))
     assert(replayed == rows(spark.read.parquet(out).where(col("batch_id") === 2)),
       "double-append changed a decision")
+  }
+
+  test("streaming incremental dedup: a failed decisions write commits nothing") {
+    // crash drill: the decisions write runs before the ingest's one commit,
+    // so a batch whose write fails leaves no segment live and no ledger
+    // entry, and its replay appends the batch's fingerprints exactly once
+    import graft.api.{IncrementalDedup, StateManifest, TextDedup}
+    val root = Files.createTempDirectory("sid-crash-idx").toString
+    val ctrl = Files.createTempDirectory("sid-crash-ctrl").toString
+    val out = Files.createTempDirectory("sid-crash-out").toString + "/decisions"
+
+    def doc(id: Long, text: String) = DocEvent(id, new java.sql.Timestamp(id * 1000), text)
+    val t1 = "the quick brown fox jumps over the lazy dog again and again today"
+    val wave = Seq(doc(1, t1), doc(2, t1),
+      doc(3, "completely different content about spark structured streaming state stores"),
+      doc(4, "too short"))
+    // the sink path is a regular file, so the decisions write fails once
+    val outPath = java.nio.file.Paths.get(out)
+    Files.write(outPath, Array[Byte](1))
+    intercept[Exception] {
+      StreamIncrDedup.ingestBatch(spark, root, out, spark.createDataset(wave), batchId = 0L)
+    }
+    Files.delete(outPath)
+    StreamIncrDedup.ingestBatch(spark, root, out, spark.createDataset(wave), batchId = 0L)
+
+    def bands(w: Seq[DocEvent]) = TextDedup.minhashBands(
+      TextDedup.shingleHashes(w.toDF(), col("doc_id"), col("text"), n = 3))
+    assert(IncrementalDedup.index(spark, root).get.count() == bands(wave).count(),
+      "the replay appended the batch's fingerprints twice")
+    assert(IncrementalDedup.segments(root).size == 1,
+      s"expected one live segment: ${IncrementalDedup.segments(root)}")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "n_prior", "keep").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq.sorted
+    val want = rows(wave.toDF().select(col("doc_id")).distinct()
+      .join(IncrementalDedup.ingest(spark, ctrl, bands(wave)), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("n_prior"), lit(0L)).as("n_prior"),
+        coalesce(col("keep"), lit(true)).as("keep")))
+    assert(rows(spark.read.parquet(out)) == want,
+      s"replayed decisions diverge from the batch control: $want")
+    assert(StateManifest.current(root).map(_.lastBatch).contains(0L))
   }
 
   test("streaming incremental dedup: restart from checkpoint continues, index and decisions complete") {
@@ -1848,7 +1923,7 @@ class StreamingSpec extends SparkSpec {
     // exactly one decision per document across both runs — no loss, no dupes
     assert(got == Seq(1L -> true, 2L -> true, 10L -> false, 20L -> false, 21L -> true).sorted,
       s"decisions after restart: $got")
-    assert(StreamIncrDedup.appliedBatches(root) == Set(0L, 1L, 2L))
+    assert(graft.api.StateManifest.current(root).map(_.lastBatch).contains(2L))
     assert(IncrementalDedup.segments(root).size == 3, "one segment per committed batch")
   }
 
@@ -1897,8 +1972,7 @@ class StreamingSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "n_prior", "keep").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq.sorted
-    val want = waves.flatMap(w => rows(
-      IncrementalDedup.ingest(spark, ctrl, bands(w), distinctCensus = true)))
+    val want = waves.flatMap(w => rows(IncrementalDedup.ingest(spark, ctrl, bands(w))))
     val got = rows(spark.read.parquet(out))
     assert(got == want.sorted,
       s"auto-compacted decisions diverge from the uncompacted control: $got vs $want")
